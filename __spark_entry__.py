@@ -152,9 +152,11 @@ def _dlit(v: float) -> str:
     SCIENTIFIC-notation literal is typed DOUBLE and parsed with
     correct rounding, so append ``e0`` when repr() produced the plain
     form. repr() round-trips, so both engines then hold identical
-    bits."""
+    bits. Non-finite values have no such literal and raise ValueError."""
     r = repr(float(v))
-    return r if ("e" in r or "inf" in r or "nan" in r) else r + "e0"
+    if r in ("inf", "-inf", "nan"):
+        raise ValueError(f"no exact DuckDB literal for non-finite {r}")
+    return r if "e" in r else r + "e0"
 
 
 def _shingle_strs() -> str:
@@ -3651,10 +3653,8 @@ def q_range_join_promo(spark, sf_dir):
 
 
 def q_event_tumbling_window(spark, sf_dir):
-    # Tumbling event-time window aggregation — the batch expression of the
-    # §2.8 streaming modernization (streaming/poll.py runs the identical
-    # groupBy(window(...)) with a watermark; results match because the
-    # window assignment is the same function).
+    # Tumbling event-time window aggregation: groupBy(window(...)) over
+    # event time, the shape a watermarked stream would run unchanged.
     e = W.events(spark, sf_dir)
     w = F.window(F.col("ts_ntz").cast("timestamp"), "1 hour")
     return (
@@ -5593,12 +5593,10 @@ def q_anchor_text(spark, sf_dir):
 
 
 def q_quantile_sketch(spark, sf_dir):
-    # Batch face of the fixed-bin histogram quantile sketch
-    # (functions/sketches.py::histogram_sketch / sketch_quantiles) —
-    # the registry twin of the r8 STREAMING sketch (streaming/poll.py::
-    # quantile_sketch_stream; merges are counter adds, so both faces
-    # are exactly equal over the same rows, pinned by the parity
-    # pytest). Per event type: p50/p90/p99 estimates read as the upper
+    # The fixed-bin histogram quantile sketch
+    # (functions/sketches.py::histogram_sketch / sketch_quantiles);
+    # merges are counter adds, so any split of the rows gives the same
+    # sketch. Per event type: p50/p90/p99 estimates read as the upper
     # edge of the first bin reaching rank ceil(q·n) — deterministic,
     # engine-exact arithmetic, no float interpolation. The GUARD
     # column pattern (q_approx_percentile_guard): the exact continuous
@@ -6176,7 +6174,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #    branches live (e=9 fresh, e≥11 repeat); displaced tenant
         #    q_weighted_sample_per_group (green r6-r14 NONUPLE; the
         #    sampling family keeps q_weighted_sample oracle-checked at
-        #    51+ plus the streaming A-ES parity pytest, and the
+        #    51+, and the
         #    scaling family keeps q_data_constrained_plan +
         #    q_mixture_materialize + THIS in-window) -> 51+
         "q_chinchilla_plan": q_chinchilla_plan,
@@ -6238,8 +6236,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #    q_dedup_exact_incr (green r11-r14 quadruple; the exact
         #    family keeps the span trio + snapshot ablation + THIS
         #    soft face in-window, the incremental ingestion gate
-        #    stays oracle-checked at 51+ beside its streaming-face
-        #    parity pytests) -> 51+
+        #    stays oracle-checked at 51+) -> 51+
         "q_dedup_soft": q_dedup_soft,
         # -- round-12 birth: the literal C4 three-sentence-span dedup
         #    (corpus-wide keep-first at sentence grain, no pair join —
@@ -12777,7 +12774,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # histogram-sketch twin: same clamped binning, same
         # first-bin-reaching-rank read, same upper-edge arithmetic as
-        # sketches.py (and the streaming face). The exact-percentile
+        # sketches.py. The exact-percentile
         # guard is Spark-side only (fail-loud): sketch drift surfaces
         # as a row-count mismatch here.
         "q_quantile_sketch": """
@@ -12803,8 +12800,7 @@ def oracle_sql() -> dict[str, str]:
               FROM sk
             ),
             -- q must be DOUBLE: a DECIMAL q makes ceil(0.9*210) = 189
-            -- where IEEE doubles (Spark, and the streaming face's
-            -- math.ceil) give 190
+            -- where IEEE doubles (Spark) give 190
             qq AS (SELECT CAST(unnest([0.5, 0.9, 0.99]) AS DOUBLE) AS q),
             hit AS (
               SELECT event_type, q, n,

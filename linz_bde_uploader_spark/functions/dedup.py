@@ -87,12 +87,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def shingles(col: Column | str, n: int = 3) -> Column:
-    """n-word shingles as strings (tokenizes inline — prefer staging the
-    tokens and calling ``shingles_from_tokens`` in hot paths)."""
-    return shingles_from_tokens(tokens(col), n)
-
-
 def shingle_value(sh: Column) -> Column:
     """Deterministic shingle hash from its token values (3-term polynomial)."""
     parts = F.split(sh, " ")
@@ -101,16 +95,6 @@ def shingle_value(sh: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, v: (acc * 961 + v) % HASH_MOD,
     )
-
-
-def minhash_signature(col: Column | str, k: int = 8) -> Column:
-    """K-element MinHash signature over 3-word shingles — array<long>."""
-    vals = F.transform(shingles(col), lambda s: shingle_value(s))
-    sigs = []
-    for a, b in MINHASH_PARAMS[:k]:
-        hashed = F.transform(vals, lambda x: (x * a + b) % HASH_MOD)
-        sigs.append(F.array_min(hashed))
-    return F.array(*sigs)
 
 
 def with_minhash_signature(
@@ -122,7 +106,7 @@ def with_minhash_signature(
     over that array. Referencing an *expensive* alias multiple times keeps
     Catalyst's CollapseProject from re-inlining it, so the shingle pipeline
     runs once per row instead of once per permutation — ~K× less work than
-    inlining ``minhash_signature`` into a multi-reference expression.
+    one inlined expression that repeats the shingle pipeline per minimum.
 
     The staged sub-expressions reference only fixed attribute names, so
     their trees are built once and memoized (caching.memo_column — ~250 ms
@@ -208,35 +192,6 @@ def minhash_candidate_pairs(
         .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
         .distinct()
     )
-
-
-def simhash(col: Column | str, bits: int = 16) -> Column:
-    """SimHash: per-bit majority vote of token hashes → one integer.
-
-    Expressed as array arithmetic over the token list (codegen, no
-    explode/shuffle): for each bit j, count tokens whose mixed hash has bit
-    j set; bit j of the result is 1 when the count exceeds half the tokens.
-    """
-    toks = tokens(col)
-    hashes = F.transform(toks, lambda t: (token_value(t) * HASH_MIX) % HASH_MOD)
-    n = F.size(toks)
-
-    def bit_votes(mask: int):
-        # Real closure over the Python int mask: the merge lambda keeps the
-        # (acc, h) arity PySpark's higher-order-function binding expects.
-        # (A `j=j` default arg makes PySpark pass a third unresolved Column.)
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc + (h.bitwiseAND(F.lit(mask)) != 0).cast("long"),
-        )
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        votes = bit_votes(1 << j)
-        bit = (votes * 2 > n.cast("long")).cast("long")
-        out = out + bit * (1 << j)
-    return out
 
 
 def with_simhash(
@@ -400,20 +355,6 @@ def duplicate_components(
     return labels
 
 
-def cluster_dedup(
-    df: DataFrame, id_col: str, pairs: DataFrame,
-    id_a: str = "id_a", id_b: str = "id_b",
-) -> DataFrame:
-    """Keep one canonical row (the min id) per near-dup *cluster*: drop
-    every row whose component label is another id. One anti-join against
-    the doomed set — the cluster-aware counterpart of ``exact_dedup``."""
-    comp = duplicate_components(pairs, id_a, id_b)
-    doomed = comp.filter(F.col("id") != F.col("component")).select("id")
-    return df.join(
-        doomed, df[id_col] == doomed["id"], "left_anti"
-    )
-
-
 def candidate_jaccard_verify(
     df: DataFrame,
     id_col: str,
@@ -428,8 +369,7 @@ def candidate_jaccard_verify(
 
     This is the scale path — the exact Jaccard compare runs on O(candidates)
     pairs (two narrow id-equi-joins to fetch the texts), never on an
-    intra-block cartesian. Use ``jaccard_dedup_pairs`` directly only for
-    verify passes over already-small subsets.
+    intra-block cartesian.
     """
     pairs = minhash_candidate_pairs(df, id_col, text_col, bands, rows_per_band)
     # Tokenize once per side BEFORE the shingle expression references the
@@ -443,36 +383,6 @@ def candidate_jaccard_verify(
     sim = ngram_jaccard_from_tokens(F.col("_tka"), F.col("_tkb"), n)
     return (
         joined.withColumn("jaccard", sim)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def jaccard_dedup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.5,
-    blocking_cols: list[str] | None = None,
-    n: int = 3,
-) -> DataFrame:
-    """n-gram Jaccard near-dup pairs above ``threshold``.
-
-    With ``blocking_cols`` the self-join is an equi-join on the block key
-    (scales); without, it is a full cross-pair compare — correct but
-    O(n²)/block, intended for verify passes over candidate subsets.
-    """
-    l = df.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("_ta"),
-                  *[F.col(c).alias(f"_la_{c}") for c in (blocking_cols or [])])
-    r = df.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("_tb"),
-                  *[F.col(c).alias(f"_lb_{c}") for c in (blocking_cols or [])])
-    cond = F.col("id_a") < F.col("id_b")
-    for c in blocking_cols or []:
-        cond = cond & (F.col(f"_la_{c}") == F.col(f"_lb_{c}"))
-    pairs = l.join(r, cond)
-    sim = ngram_jaccard(F.col("_ta"), F.col("_tb"), n)
-    return (
-        pairs.withColumn("jaccard", sim)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -631,32 +541,6 @@ def with_doc_embedding(
 # MinHash finds pairs of similar docs; this finds docs assembled from
 # corpus-common fragments (boilerplate mosaics) that pair-wise similarity
 # never flags.
-
-
-def shingle_doc_freq(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text", n: int = 3) -> DataFrame:
-    """Document frequency of every n-gram shingle hash: ``(sv, doc_freq)``.
-
-    Shingles are DISTINCT within a document first (array_distinct on the
-    map side), so a fragment repeated inside one document counts once —
-    doc_freq > 1 means the fragment crosses document boundaries. One
-    shuffle with map-side partial aggregation; state is bounded by the
-    shingle vocabulary, not corpus size.
-    """
-    staged = df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    ).select(
-        F.col(id_col),
-        F.array_distinct(
-            F.transform(
-                shingles_from_tokens(F.col("_toks"), n),
-                lambda s: shingle_value(s),
-            )
-        ).alias("_svs"),
-    )
-    return staged.select(
-        F.explode("_svs").alias("sv")
-    ).groupBy("sv").agg(F.count(F.lit(1)).alias("doc_freq"))
 
 
 def duplicated_shingle_stats(df: DataFrame, id_col: str = "doc_id",
@@ -1098,26 +982,6 @@ def paragraph_dedup_stats(
             ).alias("dup_fraction"),
         )
     )
-
-
-def prune_paragraph_duplicated(
-    df: DataFrame,
-    max_dup_fraction: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    para_tokens: int = 32,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Keep documents whose duplicated-paragraph fraction is at most
-    ``max_dup_fraction`` — the :func:`prune_cross_duplicated` contract
-    at paragraph grain (left-semi against the stats table)."""
-    stats = paragraph_dedup_stats(
-        df, id_col, text_col, para_tokens, threshold
-    )
-    keep = stats.filter(
-        F.col("dup_fraction") <= max_dup_fraction
-    ).select(id_col)
-    return df.join(keep, [id_col], "left_semi")
 
 
 # ---------------------------------------------------------------------------

@@ -119,10 +119,12 @@ def dq_audit(checks: "list[DataFrame]") -> DataFrame:
 
 # Engine-exact 4-dp rounding of a rational of exact int64s, half away
 # from zero: (2·|num|·10⁴ + den) div (2·den) with the sign re-applied.
-# `div` truncates toward zero — identical to floor on the non-negative
-# operands used here, and identical to DuckDB's `//` (which also
-# truncates), so one SQL spelling serves both engines modulo the
-# operator token. Shared with the parity test so the two can't drift.
+# Spark's `div` and DuckDB 1.0's integer `//` both truncate toward zero
+# (-7 div 2 = -7 // 2 = -3), unlike Python's flooring `//`. The sign
+# branch keeps both operands non-negative, where truncation and floor
+# coincide, so the result does not depend on either rounding rule and one
+# SQL spelling serves both engines modulo the operator token. Shared with
+# the parity test so the two can't drift.
 Q_AGREE_EXPR = "(2 * (n11 + n00) * 10000L + n) div (2 * n)"
 Q_KAPPA_EXPR = (
     "CASE WHEN _num < 0 THEN "

@@ -219,9 +219,9 @@ def logratio_model(
     occurrences get the all-smoothing ratio ``ln((0+1)/(T+dim)) −
     ln((0+1)/(R+dim))``, so unseen features still score consistently).
     This is model state — O(dim) scalars, the IVF-centroid/BPE-merge
-    collect pattern — that :func:`score_with_model` (and the streaming
-    gate built on it) folds into a map-only plan: train offline on the
-    corpus, serve online on the stream.
+    collect pattern — that :func:`score_with_model` folds into a
+    map-only plan: train offline on the corpus, score new documents
+    without a join.
 
     The frozen λ is collected from the SAME :func:`_lam_table` plan the
     batch scorer joins against (one JVM ``ln`` + one rounding for both

@@ -1297,11 +1297,10 @@ def realization_datasheet_from_counters(
     alloc_col: str = "alloc_tokens",
 ) -> DataFrame:
     """Assemble the realized-vs-target datasheet from per-(source,
-    epoch) counters ``(_s, epoch, _n, _tok)`` — the shared tail of
-    :func:`mixture_realization_audit` and the streaming realization
-    face (one datasheet implementation, two drivers: the batch audit
-    counts the materialized frame directly; the stream sums additive
-    per-batch counters, which commute under any arrival order)."""
+    epoch) counters ``(_s, epoch, _n, _tok)`` — the tail of
+    :func:`mixture_realization_audit`. The counters are additive, so
+    partial counts from any split of the corpus sum to the same
+    datasheet."""
     realized = per_epoch.groupBy("_s").agg(
         F.sum("_n").cast("long").alias("_rdocs"),
         F.sum("_tok").cast("long").alias("_rtoks"),

@@ -154,8 +154,8 @@ def histogram_sketch(
     """Fixed-bin histogram sketch — the mergeable quantile estimator for
     score distributions whose range is known up front (lengths, quality
     probabilities, perplexities): state is ``n_bins`` counters per
-    stratum regardless of row count, merges are counter adds (so the
-    batch and streamed faces are exactly equal over the same rows), and
+    stratum regardless of row count, merges are counter adds (so any
+    split of the same rows merges to the same sketch), and
     any quantile reads as a cumulative-sum scan with error bounded by
     one bin width. The GK/t-digest trade (adaptive bins, no range
     assumption) buys accuracy the pipeline's bounded, pre-rounded
@@ -431,201 +431,3 @@ def hll_lc_terms(m: int) -> "list[float]":
     import math  # noqa: PLC0415
 
     return [m * math.log(m / v) for v in range(1, m + 1)]
-
-
-# ---------------------------------------------------------------------------
-# Greenwald-Khanna quantile summaries — the DOMAIN-FREE mergeable
-# quantile sketch (histogram_sketch needs a fixed [lo, hi) up front;
-# GK does not). Pytest-only: the insert/compress loop is inherently
-# sequential state, not a relational expression, so there is no DuckDB
-# oracle — determinism and the ε bound are pinned by property tests
-# instead (the documented pytest-only class).
-
-
-def gk_build(values, eps: float):
-    """One-pass Greenwald-Khanna ε-summary of an iterable (Greenwald &
-    Khanna 2001, "Space-Efficient Online Computation of Quantile
-    Summaries"): a sorted tuple list ``(v, g, Δ)`` where the i-th
-    tuple's true rank lies in ``[Σ_{j<=i} g_j, Σ g_j + Δ_i]`` and
-    every gap obeys ``g + Δ <= max(1, floor(2εn))`` — so any rank
-    query is answered within ``εn``. State is O((1/ε)·log(εn))
-    REGARDLESS of n: the compress pass (every ⌊1/(2ε)⌋ inserts) folds
-    tuples whose combined gap still fits the invariant. Deterministic:
-    insertion position is 'after equals' (stable), compress scans
-    right-to-left — no randomness, no order sensitivity beyond the
-    input order itself (callers fix that; see gk_shard_summaries)."""
-    s, _ = gk_insert_all([], 0, values, eps)
-    return s
-
-
-def gk_insert_all(summary, n: int, values, eps: float):
-    """Continue a GK summary with more values — the streaming face's
-    primitive (:func:`gk_build` is the n=0 case): state in, state out,
-    with the SAME insert/compress arithmetic, so feeding a stream of
-    batches through this equals one :func:`gk_build` over their
-    concatenation (the stream==batch parity the streaming tests pin).
-    Returns ``(summary, n)``."""
-    if not 0.0 < eps < 0.5:
-        raise ValueError("eps must be in (0, 0.5)")
-    S: "list[list]" = [list(t) for t in summary]
-    period = max(1, int(1.0 / (2.0 * eps)))
-    for v in values:
-        v = float(v)
-        n += 1
-        cap = max(1, int(2.0 * eps * n))
-        # insert after equal values: first strictly-greater position
-        lo, hi = 0, len(S)
-        while lo < hi:
-            mid = (lo + hi) // 2
-            if S[mid][0] <= v:
-                lo = mid + 1
-            else:
-                hi = mid
-        if lo == 0 or lo == len(S):
-            S.insert(lo, [v, 1, 0])  # new min/max: exact rank
-        else:
-            S.insert(lo, [v, 1, cap - 1])
-        if n % period == 0:
-            i = len(S) - 2
-            while i >= 1:  # never fold the minimum away
-                if S[i][1] + S[i + 1][1] + S[i + 1][2] <= cap:
-                    S[i + 1][1] += S[i][1]
-                    del S[i]
-                i -= 1
-    return [(v, g, d) for v, g, d in S], n
-
-
-def gk_merge(a, b):
-    """Merge two GK summaries (one-way mergeable, Agarwal et al. 2012,
-    "Mergeable Summaries"): merge-sort by value (ties: a-side first —
-    deterministic), each tuple's Δ widened by the OTHER summary's
-    local gap at its position, so absolute rank errors ADD:
-    ``err(a ∪ b) <= err(a) + err(b)``. Folding k shard summaries of
-    ε·n_s error each therefore yields ε·Σn_s = ε·n — the ε bound
-    survives sharding with no per-merge compounding beyond it."""
-    if not a:
-        return list(b)
-    if not b:
-        return list(a)
-    out = []
-    ia = ib = 0
-    while ia < len(a) or ib < len(b):
-        take_a = ib >= len(b) or (ia < len(a) and a[ia][0] <= b[ib][0])
-        if take_a:
-            v, g, d = a[ia]
-            other, io = b, ib
-            ia += 1
-        else:
-            v, g, d = b[ib]
-            other, io = a, ia
-            ib += 1
-        # widen by the other summary's gap at this position: the next
-        # other-tuple's g + Δ - 1 (>= 0 since g >= 1) bounds how much
-        # rank uncertainty the other side contributes between its
-        # neighbors; past the other side's end there is no gap left
-        if io < len(other):
-            d += other[io][1] + other[io][2] - 1
-        out.append((v, g, d))
-    return out
-
-
-def gk_query(summary, q: float, n: int, eps: float) -> float:
-    """Quantile read: r = max(1, ceil(q·n)); return the last value
-    whose rmax stays within ``r + εn`` (the classic traversal — its
-    rmin is then >= r - εn by the gap invariant). Deterministic."""
-    import math  # noqa: PLC0415
-
-    if not summary:
-        raise ValueError("empty summary")
-    if not 0.0 < q <= 1.0:
-        raise ValueError("q must be in (0, 1]")
-    r = max(1, math.ceil(q * n))
-    budget = r + eps * n
-    rmin = 0
-    ans = summary[0][0]
-    for v, g, d in summary:
-        rmin += g
-        if rmin + d > budget:
-            break
-        ans = v
-    return ans
-
-
-def gk_shard_summaries(
-    df: DataFrame,
-    value_col: str,
-    eps: float = 0.02,
-    id_col: str = "doc_id",
-    n_shards: int = 8,
-) -> DataFrame:
-    """Distributed face: deterministic shards (``id % n_shards`` — a
-    property of the DATA, not of Spark's partitioning) each build a GK
-    ε-summary over their id-sorted values via ``applyInPandas``.
-    Returns ``(shard, pos, v, g, delta)`` — O(n_shards·(1/ε)·log(εn))
-    rows total, the bounded artifact a 100-TB pipeline collects and
-    folds (same class as centroids / λ-tables). NULL values are
-    dropped (no rank). In-shard order is pinned by the id sort, so the
-    summary is identical under any repartitioning of the input —
-    the engine-parity idiom the HLL/CMS family already uses.
-
-    Memory note: ``applyInPandas`` materializes each shard group; the
-    GK STATE is O((1/ε)log εn), so for unbounded shards swap the
-    container to a ``mapInPandas`` per-partition fold or the streaming
-    ``applyInPandasWithState`` — the summary and its bound are
-    identical."""
-    import pandas as pd  # noqa: PLC0415
-
-    if n_shards <= 0:
-        raise ValueError("n_shards must be positive")
-    if not 0.0 < eps < 0.5:
-        raise ValueError("eps must be in (0, 0.5)")
-
-    def build(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("_id", kind="mergesort")
-        s = gk_build(pdf["_v"].to_numpy(dtype=float), eps)
-        return pd.DataFrame(
-            {
-                "shard": int(key[0]),
-                "pos": range(len(s)),
-                "v": [t[0] for t in s],
-                "g": [t[1] for t in s],
-                "delta": [t[2] for t in s],
-            }
-        )
-
-    src = df.filter(F.col(value_col).isNotNull()).select(
-        F.pmod(F.col(id_col), F.lit(n_shards)).cast("int").alias("_shard"),
-        F.col(id_col).alias("_id"),
-        F.col(value_col).cast("double").alias("_v"),
-    )
-    return src.groupBy("_shard").applyInPandas(
-        build, "shard int, pos long, v double, g long, delta long"
-    )
-
-
-def gk_quantiles(
-    df: DataFrame,
-    value_col: str,
-    qs: "tuple[float, ...]" = (0.5, 0.9, 0.99),
-    eps: float = 0.02,
-    id_col: str = "doc_id",
-    n_shards: int = 8,
-) -> "list[tuple[float, float]]":
-    """End-to-end convenience: shard summaries → ordered driver fold
-    (ascending shard id — the deterministic merge order) → quantile
-    reads. Returns ``[(q, value), ...]`` with every value's TRUE rank
-    within ``ε·n`` of ``q·n`` (the property test's contract). The
-    collect is the bounded-artifact class: summary rows, never data."""
-    rows = gk_shard_summaries(
-        df, value_col, eps, id_col, n_shards
-    ).collect()
-    n = sum(r.g for r in rows)
-    if n == 0:
-        raise ValueError("no non-null values to summarize")
-    by_shard: "dict[int, list]" = {}
-    for r in sorted(rows, key=lambda r: (r.shard, r.pos)):
-        by_shard.setdefault(r.shard, []).append((r.v, r.g, r.delta))
-    merged: "list" = []
-    for s in sorted(by_shard):
-        merged = gk_merge(merged, by_shard[s])
-    return [(q, gk_query(merged, q, n, eps)) for q in qs]

@@ -771,8 +771,8 @@ def quality_classifier(
     )
     prob = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("logit"))), 6)
     # ``passthrough`` carries extra input columns into the output —
-    # what lets gate COMPOSITIONS (streaming quality -> DSIR chains)
-    # keep the text flowing without a join.
+    # what lets gate COMPOSITIONS (quality -> DSIR chains) keep the
+    # text flowing without a join.
     return (
         docs.select(
             F.col(id_col),

@@ -300,46 +300,6 @@ def robots_gate(
     )
 
 
-def robots_gate_local(
-    docs: DataFrame,
-    rules: "list[tuple[str, str, str]]",
-    url_col: str = "url",
-) -> DataFrame:
-    """Map-only form of :func:`robots_gate` for a LOCAL (Python-list)
-    rules set — the shape a STREAMING gate needs: the join + winner
-    aggregate of the DataFrame path are stateful on a stream, but a
-    curated rules list compiles to one nested CASE chain evaluated
-    per row (rules pre-sorted by the same precedence key — longest
-    prefix first, allow before disallow on ties, prefix string as the
-    final tie-break — so the FIRST matching branch IS the winner).
-    Semantics are identical to :func:`robots_gate`; the parity test
-    pins it. Rules are ``(host, directive, path_prefix)`` tuples;
-    non-allow/disallow directives are ignored.
-    """
-    base = docs.withColumn(
-        "canon_url", canonicalize_url(F.col(url_col))
-    ).withColumn("host", url_host(F.col("canon_url"))).withColumn(
-        "path", url_path(F.col("canon_url"))
-    )
-    norm = [
-        (h.lower(), d.lower(), p)
-        for h, d, p in rules
-        if d.lower() in ("allow", "disallow")
-    ]
-    # precedence: longest prefix, allow wins ties, then prefix desc —
-    # identical to the DataFrame path's struct-max ordering
-    norm.sort(key=lambda r: (len(r[2]) * 2 + (r[1] == "allow"), r[2]),
-              reverse=True)
-    allowed, rule = F.lit(True), F.lit("")
-    for h, d, p in reversed(norm):
-        cond = (F.col("host") == h) & F.col("path").startswith(p)
-        allowed = F.when(cond, F.lit(d == "allow")).otherwise(allowed)
-        rule = F.when(cond, F.lit(f"{d}:{p}")).otherwise(rule)
-    return base.withColumn("robots_allowed", allowed).withColumn(
-        "matched_rule", rule
-    )
-
-
 def extract_links(
     df: DataFrame,
     html_col: str,

@@ -5,7 +5,6 @@ from linz_bde_uploader_spark.operators.diff import (  # noqa: F401
     classify_incremental_changes,
     full_table_diff,
     keyswap_repair,
-    level0_replace,
     validate_key_column,
 )
 from linz_bde_uploader_spark.operators.negotiate import negotiate_columns  # noqa: F401

@@ -21,8 +21,10 @@ cleaner, which is fully specified by its shipped configuration
   ``SRID=4167;``, add ``longitude_offset`` (default 160.0) to every
   longitude (conf:386-391).
 - **Error budget** (P8): per-file error classes routed as
-  ignore/warn/error; the load aborts when errors exceed ``max_errors``
-  (conf:359-376; lib/LINZ/BdeUpload.pm:1164-1178).
+  ignore/warn/error; the load aborts with :class:`ErrorBudgetExceeded` when
+  errors exceed ``max_errors`` (conf:359-376; lib/LINZ/BdeUpload.pm:
+  1164-1178). The reader counts and enforces it (``sources/crs.py::
+  read_crs``); the exception lives here.
 
 Scale posture: the char map compiles to a single JVM ``translate`` plus two
 ``regexp_replace`` — whole-stage codegen, zero Python. Only the
@@ -89,7 +91,6 @@ class CleanConfig:
     invalid_datetime: str = "1800-01-01 00:00:00"
     wkt_prefix: str = "SRID=4167;"
     longitude_offset: float = 160.0
-    max_errors: int = 0
 
 
 def clean_text(col: Column | str, cfg: CleanConfig | None = None) -> Column:
@@ -224,27 +225,3 @@ def fix_wkt_df(
 class ErrorBudgetExceeded(RuntimeError):
     pass
 
-
-def route_bad_rows(
-    raw_lines: DataFrame,
-    expected_fields: int,
-    value_col: str = "value",
-) -> tuple[DataFrame, DataFrame]:
-    """P8 ``column_count`` class: split raw ``|``-terminated lines into
-    (good, bad) by field count. Trailing ``|`` means a valid row splits into
-    ``expected_fields + 1`` pieces."""
-    n = F.size(F.split(F.col(value_col), r"\|"))
-    good = raw_lines.filter(n == expected_fields + 1)
-    bad = raw_lines.filter(n != expected_fields + 1)
-    return good, bad
-
-
-def enforce_error_budget(bad: DataFrame, cfg: CleanConfig | None = None) -> int:
-    """Abort (raise) when bad-row count exceeds ``max_errors``."""
-    cfg = cfg or CleanConfig()
-    n_bad = bad.count()
-    if n_bad > cfg.max_errors:
-        raise ErrorBudgetExceeded(
-            f"{n_bad} bad rows exceeds max_errors={cfg.max_errors}"
-        )
-    return n_bad

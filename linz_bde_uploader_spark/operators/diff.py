@@ -329,10 +329,3 @@ def full_table_diff(
         .filter(F.col(ACTION_COL).isNotNull())
     )
 
-
-def level0_replace(incoming: DataFrame) -> tuple[DataFrame, "MergeStats"]:
-    """Level-0 full replace: DELETE target + INSERT SELECT (reference
-    :1949-1973). Functionally the new table IS the incoming snapshot;
-    ninsert = row count (GET DIAGNOSTICS ROW_COUNT analog)."""
-    n = incoming.count()
-    return incoming, MergeStats(ninsert=n)

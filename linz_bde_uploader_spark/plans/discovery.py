@@ -39,11 +39,6 @@ DATASET_RE = re.compile(r"^\d{14}$")
 LEVEL_DIRS = {"0": "level_0", "5": "level_5"}
 
 
-class IncompleteDatasetError(RuntimeError):
-    """A dataset directory is missing required files
-    (lib/LINZ/BdeUpload.pm:633-643 treats it as not-yet-available)."""
-
-
 @dataclass
 class DatasetRef:
     level: str  # '0' or '5'

@@ -1,8 +1,10 @@
 """Extension hooks (reference §2.9): post-load function registry,
-TablesAffected DSL, conditional finish SQL, SQL + shell event hooks.
+TablesAffected DSL, conditional finish SQL, shell event hooks.
 
-The reference exposes five extension points around the load loop; all are
-driver-side orchestration (no data-plane UDFs exist in the reference):
+The reference exposes five extension points around the load loop, all
+driver-side orchestration (no data-plane UDFs exist in the reference).
+Four are implemented here; its per-connection SQL statement lists have no
+database session to run in:
 
 - **Post-level-0 / post-upload functions** — every schema function named
   ``bde_postlevel0_%`` / ``bde_postupload_%`` with signature
@@ -15,9 +17,6 @@ driver-side orchestration (no data-plane UDFs exist in the reference):
 - **Conditional finish SQL** — ``;``-separated commands, each optionally
   guarded by ``if <test> <tables...> [loaded|affected]? <cmd>``; ``{id}``
   substituted (lib/LINZ/BdeDatabase.pm:597-636).
-- **SQL hooks** — ``db_connect_sql`` / ``dataset_load_start_sql`` /
-  ``dataset_load_end_sql`` statement lists with ``{id}``/``{dataset}``
-  substitution (lib/LINZ/BdeDatabase.pm:49-70,285-288,571-595).
 - **Shell event hooks** — ``start/finish/error/start_dataset/
   finish_dataset`` commands with ``{id},{dataset},{level},{pid}``
   substitution (lib/LINZ/BdeUpload.pm:410-421,1102-1144).
@@ -200,30 +199,6 @@ def run_finish_sql(
             raise RuntimeError(f"Cannot run finishing SQL: {cmd}: {e}") from e
         ran.append(cmd)
     return ran
-
-
-@dataclass
-class SqlHooks:
-    """Session/dataset SQL statement lists with substitution."""
-
-    connect_sql: list[str] = field(default_factory=list)
-    dataset_start_sql: list[str] = field(default_factory=list)
-    dataset_end_sql: list[str] = field(default_factory=list)
-
-    def _run(self, stmts: list[str], runner, **subs) -> None:
-        for s in stmts:
-            for k, v in subs.items():
-                s = s.replace("{" + k + "}", str(v))
-            runner(s)
-
-    def on_connect(self, runner, upl_id: int) -> None:
-        self._run(self.connect_sql, runner, id=upl_id)
-
-    def on_dataset_start(self, runner, upl_id: int, dataset: str) -> None:
-        self._run(self.dataset_start_sql, runner, id=upl_id, dataset=dataset)
-
-    def on_dataset_end(self, runner, upl_id: int, dataset: str) -> None:
-        self._run(self.dataset_end_sql, runner, id=upl_id, dataset=dataset)
 
 
 @dataclass

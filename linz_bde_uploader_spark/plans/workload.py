@@ -60,7 +60,8 @@ def _split_conf_bytes(spark: SparkSession | None) -> int:
     raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes",
                              str(default))).strip().lower()
     mult = 1
-    for suf, m in (("k", 1024), ("m", 1024**2), ("g", 1024**3)):
+    for suf, m in (("k", 1024), ("m", 1024**2), ("g", 1024**3),
+                   ("t", 1024**4), ("p", 1024**5)):
         if raw.endswith(suf + "b"):
             raw, mult = raw[:-2], m
             break

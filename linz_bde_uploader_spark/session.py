@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory holding this package; Python workers must be able to
+#: import it from any working directory
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "linz_bde_uploader_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -21,6 +25,14 @@ def get_spark(app_name: str = "linz_bde_uploader_spark",
     share one code path. At cluster scale the master/core settings come from
     spark-submit; everything below the master line is scale-independent.
     """
+    # Python workers are forked by the JVM and see its environment, not
+    # this process's sys.path; the JVM copies os.environ when it launches
+    # (on the first getOrCreate), so the package root must be on
+    # PYTHONPATH by then or a UDF run outside the repo root cannot import
+    # the package.
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         try:

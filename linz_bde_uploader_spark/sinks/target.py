@@ -1,4 +1,4 @@
-"""Staging writer + target-table sink (reference S4/S5).
+"""Target-table sink (reference S4/S5).
 
 The reference's sink pipeline is: bulk-``COPY`` the cleaned file stream
 into an index-less *working copy* in a per-job scratch schema
@@ -11,14 +11,11 @@ transaction, with the row-tolerance gate aborting before commit
 
 Spark-first mapping:
 
-- **Staging (S4)** — ``write_staging``: a parquet write of the cleaned,
-  negotiated DataFrame. On a 100-TB cluster this is the natural working
-  copy: columnar, splittable, schema-carrying; there is no index to defer
+- **Staging (S4)** — no separate working copy: the cleaned, negotiated
+  DataFrame feeds the merge directly, and each apply writes its result as
+  an uncommitted version directory (below). There is no index to defer
   because Spark joins don't use indexes (the reference's index-less COPY
-  trick is free here). For a PostgreSQL target the same DataFrame goes
-  through ``df.write.jdbc`` (batched) or per-partition ``COPY`` — the
-  shape is documented, not implemented, because this repo's sink of record
-  is the lakehouse layout.
+  trick is free here).
 - **Target (S5)** — ``ParquetTarget``: a directory-backed table with
   *atomic versioned commits*: every apply writes a new version directory
   and flips a one-line ``_CURRENT`` pointer file via ``os.replace`` — the
@@ -41,6 +38,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from linz_bde_uploader_spark.operators.diff import (
+    KeyValidityError,
     MergeStats,
     apply_changes,
     classify_incremental_changes,
@@ -52,15 +50,6 @@ from linz_bde_uploader_spark.operators.diff import (
 from linz_bde_uploader_spark.operators.tolerance import check_row_tolerance
 
 CURRENT_MARKER = "_CURRENT"
-
-
-def write_staging(df: DataFrame, path: str, partitions: int | None = None) -> str:
-    """S4: materialize the working copy. ``partitions`` pre-sizes the
-    layout for the downstream merge shuffle (bucketing analog)."""
-    if partitions:
-        df = df.repartition(partitions)
-    df.write.mode("overwrite").parquet(path)
-    return path
 
 
 class ParquetTarget:
@@ -210,6 +199,19 @@ class ParquetTarget:
         old_n = current.count()
         new_n = spark.read.parquet(d).count()
         try:
+            # Conservation: a keyed merge adds one row per insert and drops
+            # one per delete. Any other count means a key occurs more than
+            # once in the current or incoming rows it touched. A key that is
+            # new to a full-incremental load and duplicated classifies as
+            # two inserts and still conserves; validate_key_column(
+            # check_unique=True) is the gate for that case.
+            expected = old_n + stats.ninsert - stats.ndelete
+            if new_n != expected:
+                raise KeyValidityError(
+                    f"key column {self.key!r} is not unique: the merge wrote "
+                    f"{new_n} rows, expected {old_n} + {stats.ninsert} inserts "
+                    f"- {stats.ndelete} deletes = {expected}"
+                )
             self.last_gate = check_row_tolerance(
                 old_n, new_n, row_tol_error, row_tol_warning
             )
@@ -228,10 +230,11 @@ class ParquetTarget:
         row_tol_warning: float | None = None,
     ) -> tuple[str, MergeStats]:
         """Phase-1 of the level-5 merge (reference :1576-1814): key-swap
-        repair → classify I/U/D/0/X → apply → tolerance gate. The merged
-        result is materialized before the gate counts it (single
-        materialization); an error-tier violation deletes the staged
-        version and raises — the previous version stays live."""
+        repair → classify I/U/D/0/X → apply → conservation and tolerance
+        gates. The merged result is materialized before the gates count it
+        (single materialization); a duplicated key or an error-tier
+        violation deletes the staged version and raises — the previous
+        version stays live."""
         if self.key is None:
             raise ValueError("incremental apply requires a key column")
         current = self.read(spark)

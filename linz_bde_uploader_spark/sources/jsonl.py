@@ -1,9 +1,9 @@
-"""JSONL / CSV sources with the engine's error-budget semantics.
+"""JSONL source with the engine's error-budget semantics.
 
 The reference reads exactly one format (`.crs`, sources/crs.py — its
 reader abstraction is LINZ::Bde, lib/LINZ/BdeUpload.pm:1014). A modern
-ingest surface also takes line-delimited JSON and CSV staging drops;
-these readers extend the same contract the `.crs` path established:
+ingest surface also takes line-delimited JSON staging drops; this reader
+extends the same contract the `.crs` path established:
 
 - declarative schema (Catalyst prunes/pushes down as usual);
 - PERMISSIVE parse with a corrupt-record column — bad lines are
@@ -66,24 +66,3 @@ def read_jsonl(
     # columns, as here, is fine.
     return _enforce_budget(raw.cache(), path, max_errors)
 
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema_ddl: str,
-    max_errors: int = 0,
-    sep: str = "|",
-    header: bool = False,
-) -> DataFrame:
-    """Delimited text with a declared schema and an error budget — the
-    `.crs` data section's contract generalized to arbitrary separators
-    (reference P3 forces '|' + newline; here they're parameters)."""
-    raw = (
-        spark.read.schema(f"{schema_ddl}, {CORRUPT_COL} STRING")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("sep", sep)
-        .option("header", str(header).lower())
-        .csv(path)
-    )
-    return _enforce_budget(raw.cache(), path, max_errors)

@@ -286,17 +286,9 @@ def test_duplicate_components_and_cluster_dedup(spark):
     comp = {r.id: r.component for r in D.duplicate_components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
-    docs = spark.createDataFrame(
-        [(i, f"d{i}") for i in (1, 2, 3, 4, 10, 11, 99)], "doc_id long, t string"
-    )
-    kept = {r.doc_id for r in D.cluster_dedup(docs, "doc_id", pairs).collect()}
-    # one canonical survivor per cluster + untouched isolated rows
-    assert kept == {1, 10, 99}
-
-    # empty pair graph: no components, dedup is the identity
+    # empty pair graph: no components
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert D.duplicate_components(empty).count() == 0
-    assert D.cluster_dedup(docs, "doc_id", empty).count() == 7
     from linz_bde_uploader_spark import caching
 
     caching.release_intermediates()
@@ -644,7 +636,7 @@ class TestParagraphDedup:
 
     def test_paragraph_dedup_stats_flags_cross_doc_only(self, spark):
         from linz_bde_uploader_spark.functions.dedup import (
-            paragraph_dedup_stats, prune_paragraph_duplicated,
+            paragraph_dedup_stats,
         )
 
         boiler = " ".join(f"nav{i}" for i in range(32))     # shared block
@@ -668,11 +660,6 @@ class TestParagraphDedup:
         # within-doc repetition is NOT corpus duplication
         assert got[3].dup_paras == 0
         assert got[4].dup_paras == 0
-        kept = sorted(
-            r.doc_id
-            for r in prune_paragraph_duplicated(df, 0.4).collect()
-        )
-        assert kept == [3, 4]
 
     def test_paragraph_packing_rejects_out_of_domain_ids(self, spark):
         """The composite-pid arithmetic is only valid for nonnegative

@@ -11,7 +11,6 @@ from linz_bde_uploader_spark.operators.diff import (
     classify_incremental_changes,
     full_table_diff,
     keyswap_repair,
-    level0_replace,
     merge_stats,
 )
 
@@ -139,11 +138,19 @@ def test_full_table_diff(spark, scenario):
     assert merged.count() == 4
 
 
-def test_level0_replace(spark, scenario):
-    _, incoming, _ = scenario
-    out, stats = level0_replace(incoming)
+def test_level0_replace(spark, scenario, tmp_path):
+    from linz_bde_uploader_spark.sinks.target import ParquetTarget
+
+    # level 0 is a full replace: the prior state is dropped whole and
+    # ninsert is the written row count
+    current, incoming, _ = scenario
+    tgt = ParquetTarget(str(tmp_path / "t"), key="audit_id")
+    tgt.replace(current)
+    stats = tgt.replace(incoming)
     assert stats.ninsert == 4 and stats.ndelete == 0
-    assert out.count() == 4
+    assert sorted(r.audit_id for r in tgt.read(spark).collect()) == [
+        71001, 71002, 71100, 71101
+    ]
 
 
 def test_declared_actions_are_advisory(spark, scenario):
@@ -190,3 +197,20 @@ def test_key_validity_gate(spark, tmp_path):
         tgt.stage_incremental(
             spark, good, spark.createDataFrame([("a",)], "v string")
         )
+
+    # an incoming key that occurs twice breaks row conservation in the
+    # staged write: both stage paths delete the staged version and raise,
+    # leaving the committed version live
+    tgt = ParquetTarget(str(tmp_path / "d"), key="id")
+    tgt.replace(good)
+    live = tgt.current_version()
+    twice = spark.createDataFrame(
+        [(1, "x"), (1, "y"), (2, "b")], "id long, v string"
+    )
+    keys = spark.createDataFrame([(1,)], "id long")
+    with _pt.raises(KeyValidityError, match="'id' is not unique"):
+        tgt.stage_incremental(spark, twice, keys)
+    with _pt.raises(KeyValidityError, match="'id' is not unique"):
+        tgt.stage_full_incremental(spark, twice)
+    assert tgt.current_version() == live
+    assert tgt.versions() == [live]

@@ -1,5 +1,5 @@
 """Hooks (§2.9): function registry, TablesAffected DSL, conditional finish
-SQL, SQL/shell event hooks, and their wiring into the uploader."""
+SQL, shell event hooks, and their wiring into the uploader."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from linz_bde_uploader_spark.plans.hooks import (
     EventHooks,
     HookContext,
     HookRegistry,
-    SqlHooks,
     run_finish_sql,
     tables_affected,
 )
@@ -107,23 +106,6 @@ def test_run_finish_sql_guards_and_substitution(tmp_path):
         run_finish_sql("SELECT 1", failing, m, u)
 
 
-def test_sql_hooks_substitution():
-    ran = []
-    h = SqlHooks(
-        connect_sql=["SET ROLE loader_{id}"],
-        dataset_start_sql=["SELECT start('{dataset}', {id})"],
-        dataset_end_sql=["SELECT finish('{dataset}')"],
-    )
-    h.on_connect(ran.append, 7)
-    h.on_dataset_start(ran.append, 7, "20240101000000")
-    h.on_dataset_end(ran.append, 7, "20240101000000")
-    assert ran == [
-        "SET ROLE loader_7",
-        "SELECT start('20240101000000', 7)",
-        "SELECT finish('20240101000000')",
-    ]
-
-
 def test_event_hooks_fire(tmp_path):
     out = tmp_path / "fired.txt"
     h = EventHooks(commands={
@@ -134,35 +116,6 @@ def test_event_hooks_fire(tmp_path):
     assert not h.fire("start_dataset", None, "x", "0")
     # unconfigured event -> no-op
     assert not h.fire("finish", 3)
-
-
-def test_schema_load_and_patches(tmp_path):
-    from linz_bde_uploader_spark.meta.bootstrap import (
-        apply_patches,
-        bde_version,
-        schema_load,
-    )
-
-    store = schema_load(str(tmp_path / "meta"))
-    assert store._read("upload") == []
-    assert bde_version()
-    # schema_load is idempotent and preserves existing data
-    store.create_upload()
-    store2 = schema_load(str(tmp_path / "meta"))
-    assert len(store2._read("upload")) == 1
-
-    ran = []
-    patches = [
-        ("1.1: add roads", lambda s: (s.register_table("roads"), ran.append(1))),
-        ("1.2: add parcels", lambda s: (s.register_table("parcels"), ran.append(2))),
-    ]
-    assert apply_patches(store, patches) == ["1.1: add roads", "1.2: add parcels"]
-    # second run applies nothing (dbpatch idempotency)
-    assert apply_patches(store, patches) == []
-    assert ran == [1, 2]
-    # a new patch appended later runs exactly once
-    patches.append(("1.3: noop", lambda s: ran.append(3)))
-    assert apply_patches(store, patches) == ["1.3: noop"]
 
 
 def test_uploader_fires_hooks(spark, tmp_path):

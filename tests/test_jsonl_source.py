@@ -1,4 +1,4 @@
-"""JSONL / CSV sources: declared schema, corrupt-record routing, error
+"""JSONL source: declared schema, corrupt-record routing, error
 budget (the .crs contract generalized — reference P8 abort tier,
 lib/LINZ/BdeUpload.pm:1164-1178)."""
 
@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from linz_bde_uploader_spark.operators.clean import ErrorBudgetExceeded
-from linz_bde_uploader_spark.sources.jsonl import read_csv, read_jsonl
+from linz_bde_uploader_spark.sources.jsonl import read_jsonl
 
 SCHEMA = "id LONG, name STRING, score DOUBLE"
 
@@ -35,16 +35,6 @@ def test_jsonl_bad_rows_routed_within_budget(spark, jsonl_file):
     rows = sorted((r.id, r.name, r.score) for r in df.collect())
     assert rows == [(1, "a", 1.5), (2, "b", 2.5), (4, "d", 4.5)]
     assert "_corrupt_record" not in df.columns
-
-
-def test_csv_budget_and_separator(spark, tmp_path):
-    p = tmp_path / "rows.psv"
-    p.write_text("1|a|1.5\n2|b|oops_not_a_double\n3|c|3.5\n")
-    with pytest.raises(ErrorBudgetExceeded):
-        read_csv(spark, str(p), SCHEMA, max_errors=0)
-    df = read_csv(spark, str(p), SCHEMA, max_errors=1)
-    rows = sorted((r.id, r.name, r.score) for r in df.collect())
-    assert rows == [(1, "a", 1.5), (3, "c", 3.5)]
 
 
 def test_jsonl_gzip_transparency(spark, tmp_path):

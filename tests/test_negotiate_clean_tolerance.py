@@ -8,10 +8,8 @@ from linz_bde_uploader_spark.operators.clean import (
     CleanConfig,
     ErrorBudgetExceeded,
     clean_text,
-    enforce_error_budget,
     fix_date_range,
     fix_wkt,
-    route_bad_rows,
 )
 from linz_bde_uploader_spark.operators.negotiate import (
     NoMatchingColumnsError,
@@ -173,15 +171,20 @@ def test_wkt_fixup_df_hybrid(spark):
     assert out.keys() == {1, 2, 3, 4}
 
 
-def test_error_budget(spark):
-    raw = spark.createDataFrame(
-        [("1|a|x|",), ("2|b|y|",), ("3|c|",)], ["value"]  # last row short
+def test_error_budget(spark, crs_dir, tmp_path):
+    from linz_bde_uploader_spark.sources.crs import read_crs
+
+    # a row one field short is a column_count error (P8): over budget the
+    # read aborts, within budget the row is dropped and the rest load
+    short = tmp_path / "short.crs"
+    short.write_text(
+        (crs_dir / "bnd1.crs").read_text(encoding="utf-8") + "9004|4|504|71004|\n",
+        encoding="utf-8",
     )
-    good, bad = route_bad_rows(raw, expected_fields=3)
-    assert good.count() == 2 and bad.count() == 1
-    with pytest.raises(ErrorBudgetExceeded):
-        enforce_error_budget(bad, CleanConfig(max_errors=0))
-    assert enforce_error_budget(bad, CleanConfig(max_errors=5)) == 1
+    with pytest.raises(ErrorBudgetExceeded, match="1 column_count errors"):
+        read_crs(spark, str(short), max_errors=0)
+    df, _ = read_crs(spark, str(short), max_errors=5)
+    assert sorted(r.line_id for r in df.collect()) == [9001, 9002, 9003]
 
 
 def test_tolerance_tiers():

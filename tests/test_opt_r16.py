@@ -216,6 +216,8 @@ class TestScanSplitConfBytes:
                 ("1g", 1024**3),
                 ("4096k", 4 * 1024**2),
                 ("12345", 12345),
+                ("1t", 1024**4),
+                ("2pb", 2 * 1024**5),
             ]:
                 spark.conf.set("spark.sql.files.maxPartitionBytes", raw)
                 assert _split_conf_bytes(spark) == want, raw
@@ -256,6 +258,32 @@ class TestDuckdbDoubleLiterals:
         assert repr(exact) == "0.9633636474609375"
         if repr(plain) == repr(exact):  # engine fixed it upstream: fine
             pytest.skip("this DuckDB build parses plain decimals exactly")
+
+    def test_oracle_sql_has_no_long_plain_decimals(self):
+        # DuckDB types a plain decimal literal as DECIMAL and converts it
+        # to DOUBLE one ulp off once the mantissa passes 2^53; such
+        # constants must go through _dlit (scientific notation)
+        import re
+
+        import __spark_entry__ as entry
+
+        plain = re.compile(r"(?<![\w.])(\d+)\.(\d+)(?![\w.])")
+        bad = [
+            (name, m.group(0))
+            for name, sql in entry.oracle_sql().items()
+            for m in plain.finditer(sql)
+            if len(m.group(1)) + len(m.group(2)) >= 16
+        ]
+        assert not bad, bad
+        assert plain.search("SELECT 0.9633636474609375 AS x")
+        assert not plain.search("SELECT 0.9633636474609375e0 AS x")
+
+    def test_dlit_rejects_non_finite(self):
+        import __spark_entry__ as entry
+
+        for v in (float("inf"), float("-inf"), float("nan")):
+            with pytest.raises(ValueError, match="non-finite"):
+                entry._dlit(v)
 
 
 class TestLitExprParity:

@@ -131,148 +131,6 @@ class TestIncrementalExactSpanMass:
         assert a == b
 
 
-# ---------------------------------------------------------------------------
-# GK quantile summaries (round-11 birth, pytest-only by design: the
-# insert/compress loop is sequential state, not a relational
-# expression — no DuckDB oracle exists; these property tests ARE the
-# correctness gate, per the documented pytest-only class).
-
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-from linz_bde_uploader_spark.functions.sketches import (
-    gk_build,
-    gk_merge,
-    gk_query,
-    gk_quantiles,
-    gk_shard_summaries,
-)
-
-QS = (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0)
-
-
-def _rank_ok(vals, ans, q, eps):
-    # the returned value's rank interval must overlap [r-еn, r+еn]
-    import math
-
-    n = len(vals)
-    r = max(1, math.ceil(q * n))
-    s = sorted(vals)
-    lo = sum(1 for v in s if v < ans) + 1
-    hi = sum(1 for v in s if v <= ans)
-    return lo <= r + eps * n and hi >= r - eps * n
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    vals=st.lists(
-        st.floats(min_value=-1e6, max_value=1e6,
-                  allow_nan=False, allow_infinity=False),
-        min_size=1, max_size=400,
-    ),
-    eps=st.sampled_from([0.01, 0.05, 0.1, 0.2]),
-)
-def test_gk_build_eps_bound(vals, eps):
-    s = gk_build(vals, eps)
-    n = len(vals)
-    # gap invariant: every tuple's g+delta fits the cap, so any rank
-    # is answerable within eps*n
-    cap = max(1, int(2 * eps * n))
-    assert all(g + d <= cap for _, g, d in s)
-    assert sum(g for _, g, _ in s) == n
-    for q in QS:
-        ans = gk_query(s, q, n, eps)
-        assert _rank_ok(vals, ans, q, eps), (q, ans, sorted(vals))
-
-
-@settings(max_examples=60, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(
-    vals=st.lists(
-        st.floats(min_value=-1e6, max_value=1e6,
-                  allow_nan=False, allow_infinity=False),
-        min_size=1, max_size=600,
-    ),
-    eps=st.sampled_from([0.05, 0.1]),
-    k=st.integers(min_value=1, max_value=7),
-)
-def test_gk_sharded_merge_eps_bound(vals, eps, k):
-    # absolute errors ADD across the ordered fold: k shard summaries
-    # of eps*n_s each bound the merged summary by eps*n
-    chunks = [vals[i::k] for i in range(k)]
-    merged = []
-    for c in chunks:
-        if c:
-            merged = gk_merge(merged, gk_build(c, eps))
-    n = len(vals)
-    for q in QS:
-        ans = gk_query(merged, q, n, eps)
-        assert _rank_ok(vals, ans, q, eps), (q, k, ans, sorted(vals))
-
-
-def test_gk_space_is_sublinear():
-    n = 20000
-    vals = [((i * 2654435761) % 1000003) / 7.0 for i in range(n)]
-    s = gk_build(vals, 0.01)
-    # O((1/eps) log(eps n)) ~ hundreds of tuples, never O(n)
-    assert len(s) < n / 10
-    for q in QS:
-        assert _rank_ok(vals, gk_query(s, q, n, 0.01), q, 0.01)
-
-
-def test_gk_duplicates_and_constant_input():
-    vals = [5.0] * 100
-    s = gk_build(vals, 0.05)
-    for q in QS:
-        assert gk_query(s, q, 100, 0.05) == 5.0
-    # heavy duplication with two values
-    vals = [1.0] * 90 + [2.0] * 10
-    s = gk_build(vals, 0.05)
-    assert gk_query(s, 0.5, 100, 0.05) == 1.0
-    assert gk_query(s, 1.0, 100, 0.05) == 2.0
-
-
-class TestGKSpark:
-    def _df(self, spark, parts):
-        rows = [(i, float((i * 37) % 101)) for i in range(1, 801)]
-        return spark.createDataFrame(
-            rows, "doc_id long, score double"
-        ).repartition(parts)
-
-    def test_partitioning_invariance(self, spark):
-        # the summary is a property of the DATA (id-keyed shards,
-        # id-sorted in-shard order), not of Spark's physical layout
-        a = sorted(
-            map(tuple, gk_shard_summaries(
-                self._df(spark, 1), "score", 0.05
-            ).collect())
-        )
-        b = sorted(
-            map(tuple, gk_shard_summaries(
-                self._df(spark, 13), "score", 0.05
-            ).collect())
-        )
-        assert a == b and len(a) > 0
-
-    def test_end_to_end_quantiles_within_eps(self, spark):
-        df = self._df(spark, 8)
-        vals = [float((i * 37) % 101) for i in range(1, 801)]
-        for q, ans in gk_quantiles(df, "score", QS, eps=0.05):
-            assert _rank_ok(vals, ans, q, 0.05), (q, ans)
-
-    def test_nulls_dropped_and_empty_raises(self, spark):
-        import pytest as _pt
-
-        df = spark.createDataFrame(
-            [(1, None), (2, 3.0)], "doc_id long, score double"
-        )
-        got = gk_quantiles(df, "score", (0.5,), eps=0.1)
-        assert got == [(0.5, 3.0)]
-        empty = spark.createDataFrame([(1, None)], "doc_id long, score double")
-        with _pt.raises(ValueError, match="no non-null"):
-            gk_quantiles(empty, "score", (0.5,), eps=0.1)
-
-
 class TestLSHBandPlan:
     def test_curve_and_measured_point(self, spark):
         from linz_bde_uploader_spark.functions.dedup import (

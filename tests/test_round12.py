@@ -1,8 +1,7 @@
 """Round-12 births: span-grain benchmark decontamination + per-item
 leakage report, image-text alignment gate + datasheet, C4 blocked-word
 gate, C4 three-sentence-span dedup, C4 line-and-page rules, unigram-LM
-tokenizer trainer. (The streaming canonical-URL dedup face is in
-test_streaming.py.)"""
+tokenizer trainer."""
 
 from pyspark.sql import functions as F
 

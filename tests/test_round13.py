@@ -3,9 +3,7 @@
 drop-reason provenance pair over the text corpus-build level frame,
 the per-source contamination datasheet (the span family's third
 grain), D4 selection (SemDeDup + per-cluster prototypicality
-filter), and the UniMax epoch-capped budget split. (The streaming
-span-decontamination and multimodal-ingest faces are in
-test_streaming.py.)"""
+filter), and the UniMax epoch-capped budget split."""
 
 from pyspark.sql import functions as F
 

@@ -4,8 +4,7 @@ per-language datasheet), the FineWeb per-snapshot vs global dedup
 ablation, the margin-criterion bitext mining face, the
 quality-threshold ablation datasheet, the DoReMi one-step EG mixture
 plan, the filter-vs-dedup stage-ordering ablation, and the
-perplexity-pruning ablation. (The round's streaming weighted-reservoir
-face is in test_streaming.py per the streaming-face precedent.)"""
+perplexity-pruning ablation."""
 
 import math
 

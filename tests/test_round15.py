@@ -9,9 +9,7 @@ vocabulary-growth datasheet (nested hash-bucket prefixes off one
 token-key agg), and the training-export composite (the full
 plan→materialize→pack loop with a per-shard manifest). The k-means
 Arrow strategy-invariance fix is tested in
-test_clustering.py (where the family lives) and the streaming
-mixture-realization face in test_streaming.py (the streaming-face
-precedent)."""
+test_clustering.py (where the family lives)."""
 
 from pyspark.sql import functions as F
 

@@ -398,3 +398,26 @@ def test_oov_vocab_ties_break_by_token_order(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         oov_stats(df, vocab_size=0)
+
+
+def test_bpe_wrap_matches_regex_form(spark):
+    # the split-based wrapper must equal the per-character regex it
+    # replaced, including surrogate pairs and stray wrapper characters
+    from pyspark.sql import functions as F
+
+    sos, eos = X.BPE_SOS, X.BPE_EOS
+    texts = ["", None, "ab", "a\U0001F600b\U0001D11E", "é z", "ab" + sos,
+             "x" + eos, sos + eos, sos + "q" + eos + sos]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    regex = F.regexp_replace(
+        F.translate("t", sos + eos, ""), "(?s)(.)", sos + "$1" + eos
+    )
+    rows = df.select("t", X._bpe_wrap(F.col("t")).alias("got"),
+                     regex.alias("want")).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r.got == r.want, repr(r.t)
+    by_text = {r.t: r.got for r in rows}
+    assert by_text["a\U0001F600b\U0001D11E"] == "".join(
+        sos + ch + eos for ch in "a\U0001F600b\U0001D11E"
+    )
