@@ -63,7 +63,9 @@ def main(argv: list[str] | None = None) -> int:
     defs = select_tables(defs, subset=args.tables, exclude=args.exclude)
 
     spark = get_spark("linz_bde_uploader")
-    up = BdeUploader(spark, args.repo, args.target, meta, defs)
+    up = BdeUploader(
+        spark, args.repo, args.target, meta, defs, override_locks=args.override_locks
+    )
     if args.full or args.full_incremental:
         reports = up.run_level0(
             before=args.before, rebuild=args.rebuild,

@@ -168,7 +168,8 @@ class MetaStore:
         """C1: refuse a new job while any upload is active, unless
         concurrent uploads are allowed or locks are overridden
         (lib/LINZ/BdeDatabase.pm:377-398). Expired actives are zombie-
-        released first (C5)."""
+        released first (C5); overridden actives end ``E`` and lose their
+        table locks the same way."""
         self.release_expired(expiry_hours)
         rows = self._read("upload")
         active = [r for r in rows if r["status"] == "A"]
@@ -177,9 +178,9 @@ class MetaStore:
                 raise ActiveUploadError(
                     f"upload(s) {[r['id'] for r in active]} still active"
                 )
-            for r in rows:
-                if r["status"] == "A":
-                    r["status"] = "E"
+            for r in active:
+                r["status"] = "E"
+                self._release_table_locks(r["id"])
         now = self._clock()
         new_id = max((r["id"] for r in rows), default=0) + 1
         rows.append(

@@ -72,10 +72,6 @@ class MergeStats:
     nnullupdate: int = 0
     ndelete: int = 0
 
-    @property
-    def total_applied(self) -> int:
-        return self.ninsert + self.nupdate + self.ndelete
-
 
 class KeyValidityError(ValueError):
     """The merge key fails the reference's validity gate."""
@@ -155,7 +151,6 @@ def classify_incremental_changes(
     incoming: DataFrame,
     change_keys: DataFrame,
     key: str,
-    compare_cols: list[str] | None = None,
     unique_cols: list[str] | None = None,
 ) -> DataFrame:
     """Classify each changed key into I/U/D/0/X → DataFrame ``(key, _action)``.
@@ -166,9 +161,7 @@ def classify_incremental_changes(
     calls it a manual predicate pushdown; here Catalyst would push it anyway
     but we keep the narrow shape so the key set broadcasts).
     """
-    if compare_cols is None:
-        compare_cols = [c for c in current.columns if c != key]
-    compare_cols = [c for c in compare_cols if c != key]
+    compare_cols = [c for c in current.columns if c != key]
     unique_cols = [c for c in (unique_cols or []) if c != key]
 
     # No forced broadcast: a level-5 day at scale can be a large fraction of
@@ -299,7 +292,6 @@ def full_table_diff(
     current: DataFrame,
     incoming: DataFrame,
     key: str,
-    compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """Full-outer compare by key → ``(key, _action)`` with I/U/D only
     (unchanged rows excluded) — ``ver_apply_table_differences`` semantics
@@ -309,9 +301,7 @@ def full_table_diff(
     output is narrow. At 100 TB this is the optimal shape — the compare
     must see every row once, and nothing is re-shuffled afterwards.
     """
-    if compare_cols is None:
-        compare_cols = [c for c in current.columns if c != key]
-    compare_cols = [c for c in compare_cols if c != key]
+    compare_cols = [c for c in current.columns if c != key]
 
     cur = current.alias("cur")
     inc = incoming.alias("inc")

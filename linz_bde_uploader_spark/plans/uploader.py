@@ -4,10 +4,19 @@ and the end-to-end run loop (reference §3 entry points).
 Ties together every component the way ``lib/LINZ/BdeUpload.pm`` does:
 discovery (S3) → per dataset → per table → read ``.crs`` (S1/S2) → clean
 (P4–P8) → negotiate (P1/P2) → stage (S4) → apply (A1/J1–J6, S5) →
-tolerance (C9) → stats + watermarks (S6), under the job/lock services
-(C1–C8). The per-table work is a Spark job; planning and metadata stay on
-the driver — the same control/data split as the reference, with the data
-plane distributed.
+tolerance (C9) → dataset commit → stats + watermarks (S6), under the
+job/lock services (C1–C8). The per-table work is a Spark job; planning and
+metadata stay on the driver — the same control/data split as the
+reference, with the data plane distributed.
+
+``-full`` and ``-incremental`` share one run loop, as both go through
+``ApplyDatasetUpdates`` in the reference (lib/LINZ/BdeUpload.pm:716-840):
+each dataset, in name order, stages every pending table into one
+``DatasetTransaction`` and commits it with one manifest flip, and only
+then are the stats and watermarks written. A failure before the flip
+leaves every table of the dataset at its previous version. The levels
+differ only in which tables are pending, the stage call, and level 5's
+change table.
 """
 
 from __future__ import annotations
@@ -32,7 +41,6 @@ from linz_bde_uploader_spark.sinks.target import (
 from linz_bde_uploader_spark.sources.crs import read_crs
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 CHANGE_TABLE_NAME = "l5_change_table"
 
@@ -242,6 +250,7 @@ class BdeUploader:
         events=None,
         finish_sql: str = "",
         sql_runner=None,
+        override_locks: bool = False,
     ):
         self.spark = spark
         self.repo = repo
@@ -256,6 +265,7 @@ class BdeUploader:
         self.events = events  # hooks.EventHooks | None
         self.finish_sql = finish_sql
         self.sql_runner = sql_runner or (lambda sql: spark.sql(sql))
+        self.override_locks = override_locks  # -override-locks (C1)
         # Dataset-level commit point: every completed dataset publishes all
         # its table versions through ONE atomic manifest flip; repair() at
         # startup converges per-table pointers after a mid-flip crash.
@@ -279,9 +289,6 @@ class BdeUploader:
         if self.finish_sql:
             H.run_finish_sql(self.finish_sql, self.sql_runner, self.meta, upl_id)
 
-    def _target(self, d: TableDef) -> ParquetTarget:
-        return ParquetTarget(f"{self.target_root}/{d.name}", key=d.key_column)
-
     def _load_files(self, ds: discovery.DatasetRef, d: TableDef, prev_details: dict[str, str]):
         """Read+clean+negotiate one table's files in a dataset. Returns
         (DataFrame, details-string, continuity-status)."""
@@ -293,9 +300,7 @@ class BdeUploader:
             p = ds.file_path(fname)
             if p is None:
                 raise FileNotFoundError(f"{ds.name}: missing file {fname} for {d.name}")
-            df, hdr = read_crs(
-                self.spark, p, cast=False, max_errors=self.max_errors, validate=True
-            )
+            df, hdr = read_crs(self.spark, p, cast=False, max_errors=self.max_errors)
             if ds.level == "5":
                 status = check_start_date(
                     hdr.start, prev_details.get(fname.lower()),
@@ -318,12 +323,6 @@ class BdeUploader:
                 out = out.withColumn(c, clean_text(F.col(c), self.clean_cfg))
         return out, details, continuity, header0
 
-    def _target_schema(self, d: TableDef, header) -> T.StructType:
-        t = self._target(d)
-        if t.exists():
-            return t.read(self.spark).schema
-        return header.schema  # first load: file header defines the table
-
     def run_level0(
         self,
         before: str | None = None,
@@ -336,165 +335,150 @@ class BdeUploader:
         state, but I/U/D counters and tolerance gates apply (reference
         ver_apply_table_differences, :1914-1944)."""
         datasets = discovery.list_datasets(self.repo, "0", before)
-        reports: list[LoadReport] = []
-        upl_id = self.meta.create_upload()
-        self._fire("start", upl_id, level="0")
-        ok = True
-        try:
-            for d in select_tables(self.tables, level="0"):
-                if d.is_change_table:
-                    continue
-                st = self.meta.table_status(d.name)
-                tbl_id = st.tbl_id if st else self.meta.register_table(
-                    d.name, key_column=d.key_column,
+
+        def pending(d: TableDef, st, ds: discovery.DatasetRef) -> bool:
+            last = st.last_level0_dataset if st else None
+            return discovery.pending_level0(datasets, last, rebuild, d.files) == [ds]
+
+        def stage(d: TableDef, target: ParquetTarget, df):
+            if full_incremental and d.key_column is not None and target.exists():
+                return *target.stage_full_incremental(
+                    self.spark, df,
                     row_tol_error=d.row_tol_error, row_tol_warning=d.row_tol_warning,
-                )
-                last_l0 = st.last_level0_dataset if st else None
-                pend = discovery.pending_level0(datasets, last_l0, rebuild, d.files)
-                for ds in pend:
-                    self.meta.acquire_table_lock(tbl_id, upl_id)
-                    t0 = time.monotonic()
-                    df, details, cont, hdr = self._load_files(ds, d, {})
-                    target = self._target(d)
-                    negotiated = negotiate_columns(df, self._target_schema(d, hdr))
-                    diffed = (
-                        full_incremental and target.exists() and d.key_column is not None
-                    )
-                    if diffed:
-                        stats = target.apply_full_incremental(
-                            self.spark, negotiated,
-                            row_tol_error=d.row_tol_error,
-                            row_tol_warning=d.row_tol_warning,
-                        )
-                    else:
-                        stats = target.replace(negotiated)
-                    # keep the dataset manifest in sync so manifest-resolved
-                    # readers never see a level-0 table at a stale version
-                    self.manifest.commit(
-                        {os.path.abspath(target.path): target.current_version()}
-                    )
-                    self.meta.record_load(
-                        tbl_id, upl_id, ds.name, "0", incremental=diffed,
-                        ninsert=stats.ninsert, nupdate=stats.nupdate,
-                        nnullupdate=stats.nnullupdate, ndelete=stats.ndelete,
-                        duration_secs=time.monotonic() - t0, details=details,
-                    )
-                    reports.append(LoadReport(
-                        d.name, ds.name, "0", stats.ninsert, stats.nupdate,
-                        stats.nnullupdate, stats.ndelete, cont,
-                    ))
-            if reports:
-                self._post_hooks(upl_id, "0")
-        except Exception:
-            ok = False
-            self._fire("error", upl_id, level="0")
-            raise
-        finally:
-            self.meta.finish_upload(upl_id, ok=ok)
-            self._fire("finish", upl_id, level="0")
-        return reports
+                ), True
+            return *target.stage_replace(df), False
+
+        return self._run("0", datasets, pending, lambda ds: stage)
 
     def run_level5(self, before: str | None = None) -> list[LoadReport]:
         datasets = discovery.list_datasets(self.repo, "5", before)
         chg_def = next((d for d in self.tables if d.is_change_table), None)
         if chg_def is None:
             raise ConfigError("level-5 run requires an l5_change_table record")
+
+        def pending(d: TableDef, st, ds: discovery.DatasetRef) -> bool:
+            last = st.last_upload_dataset if st else None
+            return bool(discovery.pending_level5([ds], last, d.l5_is_full, d.files))
+
+        def stager(ds: discovery.DatasetRef):
+            # The change table for this dataset (reference
+            # CreateLevel5ChangeTable, lib/LINZ/BdeUpload.pm:874-906).
+            chg_path = ds.file_path(chg_def.files[0]) if chg_def.files else None
+            if chg_path is None:
+                raise FileNotFoundError(
+                    f"{ds.name}: missing change table file "
+                    f"{chg_def.files} (t/linz_bde_uploader.t:1077-1099)"
+                )
+            chg_df, _ = read_crs(self.spark, chg_path, cast=True)
+
+            def stage(d: TableDef, target: ParquetTarget, df):
+                if d.l5_is_full:
+                    # "the level 5 files are actually a full level 0
+                    # update" (conf/tables.conf:40) — full replace, no
+                    # change table involved
+                    return *target.stage_replace(df), True
+                if d.key_column is None:
+                    raise ConfigError(f"{d.name}: level-5 requires key=")
+                # P9/P10: lowercase tablename, project this table's keys
+                keys = (
+                    chg_df.filter(F.lower(F.col("tablename")) == d.name)
+                    .select(F.col("tablekeyvalue").cast("long").alias(d.key_column))
+                    .distinct()
+                )
+                return *target.stage_incremental(
+                    self.spark, df, keys,
+                    row_tol_error=d.row_tol_error, row_tol_warning=d.row_tol_warning,
+                ), True
+
+            return stage
+
+        return self._run("5", datasets, pending, stager)
+
+    def _run(self, level: str, datasets, pending, stager) -> list[LoadReport]:
+        """The upload lifecycle both levels share: one upload row, the
+        start/error/finish events, then each dataset in name order as one
+        transaction, then the post-upload hooks.
+
+        ``pending(table, status, dataset)`` says whether a table loads from
+        a dataset; ``stager(dataset)`` returns the level's stage call,
+        ``stage(table, target, df) -> (version, stats, incremental)``."""
+        tables = [
+            d for d in select_tables(self.tables, level=level) if not d.is_change_table
+        ]
         reports: list[LoadReport] = []
-        upl_id = self.meta.create_upload()
-        self._fire("start", upl_id, level="5")
+        upl_id = self.meta.create_upload(override_locks=self.override_locks)
+        self._fire("start", upl_id, level=level)
         ok = True
         try:
-            level5_tables = [
-                d for d in select_tables(self.tables, level="5")
-                if not d.is_change_table
-            ]
             for ds in datasets:
-                # The change table for this dataset (reference
-                # CreateLevel5ChangeTable, lib/LINZ/BdeUpload.pm:874-906).
-                chg_path = ds.file_path(chg_def.files[0]) if chg_def.files else None
-                if chg_path is None:
-                    raise FileNotFoundError(
-                        f"{ds.name}: missing change table file "
-                        f"{chg_def.files} (t/linz_bde_uploader.t:1077-1099)"
-                    )
-                chg_df, _ = read_crs(self.spark, chg_path, cast=True)
-                # Whole-dataset transaction: every table stages its new
-                # version first; dataset end publishes every staged
-                # version through ONE atomic manifest flip, so a
-                # mid-dataset failure (including a tolerance abort)
-                # leaves ALL tables at their previous state — the
+                stage = stager(ds)
+                # Whole-dataset transaction: every pending table stages its
+                # new version first; ONE manifest flip then publishes them
+                # all, so any failure before it (including a tolerance
+                # abort) leaves every table at its previous state — the
                 # reference's per-dataset txn (BdeDatabase.pm:476-510).
-                txn = DatasetTransaction(manifest=self.manifest)
-                staged_meta: list[tuple] = []
+                txn = DatasetTransaction(self.manifest)
+                loads = []
                 try:
-                    for d in level5_tables:
-                        st = self.meta.table_status(d.name)
-                        tbl_id = st.tbl_id if st else self.meta.register_table(
-                            d.name, key_column=d.key_column,
-                            row_tol_error=d.row_tol_error,
-                            row_tol_warning=d.row_tol_warning,
-                        )
-                        last = st.last_upload_dataset if st else None
-                        if not discovery.pending_level5([ds], last, d.l5_is_full, d.files):
-                            continue
-                        if d.key_column is None and not d.l5_is_full:
-                            raise ConfigError(f"{d.name}: level-5 requires key=")
-                        prev = parse_upload_details(
-                            st.last_upload_details
-                            if st and st.last_upload_type == "5"
-                            else None
-                        )
-                        self.meta.acquire_table_lock(tbl_id, upl_id)
-                        t0 = time.monotonic()
-                        df, details, cont, hdr = self._load_files(ds, d, prev)
-                        target = self._target(d)
-                        negotiated = negotiate_columns(df, self._target_schema(d, hdr))
-                        if d.l5_is_full:
-                            # "the level 5 files are actually a full level 0
-                            # update" (conf/tables.conf:40) — full replace,
-                            # no change table involved
-                            version, stats = target.stage_replace(negotiated)
-                        else:
-                            # P9/P10: lowercase tablename, project this
-                            # table's keys
-                            keys = (
-                                chg_df.filter(F.lower(F.col("tablename")) == d.name)
-                                .select(
-                                    F.col("tablekeyvalue").cast("long").alias(d.key_column)
-                                )
-                                .distinct()
-                            )
-                            version, stats = target.stage_incremental(
-                                self.spark, negotiated, keys,
-                                row_tol_error=d.row_tol_error,
-                                row_tol_warning=d.row_tol_warning,
-                            )
-                        txn.stage(target, version, stats)
-                        staged_meta.append(
-                            (d, tbl_id, stats, details, cont, time.monotonic() - t0)
-                        )
+                    for d in tables:
+                        load = self._stage_table(upl_id, ds, d, pending, stage, txn)
+                        if load is not None:
+                            loads.append(load)
                 except Exception:
                     txn.abort()
                     raise
+                if not loads:
+                    continue
+                # Not under the abort above: once the manifest has flipped,
+                # the staged directories are live data.
                 txn.commit()
-                for d, tbl_id, stats, details, cont, dur in staged_meta:
-                    self.meta.record_load(
-                        tbl_id, upl_id, ds.name, "5", incremental=True,
-                        ninsert=stats.ninsert, nupdate=stats.nupdate,
-                        nnullupdate=stats.nnullupdate, ndelete=stats.ndelete,
-                        duration_secs=dur, details=details,
-                    )
-                    reports.append(LoadReport(
-                        d.name, ds.name, "5", stats.ninsert, stats.nupdate,
-                        stats.nnullupdate, stats.ndelete, cont,
-                    ))
+                reports += [self._record(upl_id, ds, level, load) for load in loads]
             if reports:
-                self._post_hooks(upl_id, "5")
+                self._post_hooks(upl_id, level)
         except Exception:
             ok = False
-            self._fire("error", upl_id, level="5")
+            self._fire("error", upl_id, level=level)
             raise
         finally:
             self.meta.finish_upload(upl_id, ok=ok)
-            self._fire("finish", upl_id, level="5")
+            self._fire("finish", upl_id, level=level)
         return reports
+
+    def _stage_table(self, upl_id, ds, d: TableDef, pending, stage, txn):
+        """Register, lock, load, negotiate and stage one table of a dataset
+        into ``txn``. Returns what ``_record`` needs, or None when the table
+        has nothing pending in this dataset."""
+        st = self.meta.table_status(d.name)
+        tbl_id = st.tbl_id if st else self.meta.register_table(
+            d.name, key_column=d.key_column,
+            row_tol_error=d.row_tol_error, row_tol_warning=d.row_tol_warning,
+        )
+        if not pending(d, st, ds):
+            return None
+        prev = parse_upload_details(
+            st.last_upload_details if st and st.last_upload_type == "5" else None
+        )
+        self.meta.acquire_table_lock(tbl_id, upl_id)
+        t0 = time.monotonic()
+        df, details, cont, hdr = self._load_files(ds, d, prev)
+        target = ParquetTarget(f"{self.target_root}/{d.name}", key=d.key_column)
+        # first load: the file header defines the table
+        schema = target.read(self.spark).schema if target.exists() else hdr.schema
+        negotiated = negotiate_columns(df, schema)
+        version, stats, incremental = stage(d, target, negotiated)
+        txn.stage(target, version, stats)
+        return d, tbl_id, stats, incremental, details, cont, time.monotonic() - t0
+
+    def _record(self, upl_id, ds, level: str, load) -> LoadReport:
+        """Stats row + watermarks (S6) for one committed table load."""
+        d, tbl_id, stats, incremental, details, cont, dur = load
+        self.meta.record_load(
+            tbl_id, upl_id, ds.name, level, incremental=incremental,
+            ninsert=stats.ninsert, nupdate=stats.nupdate,
+            nnullupdate=stats.nnullupdate, ndelete=stats.ndelete,
+            duration_secs=dur, details=details,
+        )
+        return LoadReport(
+            d.name, ds.name, level, stats.ninsert, stats.nupdate,
+            stats.nnullupdate, stats.ndelete, cont,
+        )

@@ -25,6 +25,12 @@ Spark-first mapping:
   table. The tolerance gate runs *before* the pointer flip, so an
   error-tier violation aborts with the previous version intact — the
   reference's rollback semantics (t/linz_bde_uploader.t:1309-1359).
+- **Dataset commit** — the uploader never flips a table pointer itself.
+  Level 0 and level 5 alike stage every pending table of a dataset into
+  one ``DatasetTransaction``; its commit is one ``DatasetManifest`` flip,
+  after which the per-table pointers converge (``repair()`` replays that
+  convergence after a crash). ``replace`` and ``apply_incremental`` stage
+  and flip a single table directly, outside any dataset.
 """
 
 from __future__ import annotations
@@ -276,14 +282,6 @@ class ParquetTarget:
             spark, current, actions, incoming, row_tol_error, row_tol_warning
         )
 
-    def apply_full_incremental(self, spark, incoming, row_tol_error=None,
-                               row_tol_warning=None) -> MergeStats:
-        v, stats = self.stage_full_incremental(
-            spark, incoming, row_tol_error, row_tol_warning
-        )
-        self._commit(v)
-        return stats
-
 
 class DatasetManifest:
     """Jointly-atomic multi-table commit point (SURVEY §7.4 hard part 2).
@@ -367,40 +365,26 @@ class DatasetTransaction:
     rollback (whole dataset in one DB transaction,
     lib/LINZ/BdeDatabase.pm:476-510, conf/linz_bde_uploader.conf:85-92).
 
-    With a ``DatasetManifest`` attached, commit is *jointly atomic*: the
-    single manifest pointer flip publishes every staged table at once, and
-    the per-table pointers are converged afterwards (``repair()`` heals a
-    crash mid-convergence). Without one, commit degrades to the round-2
-    behavior — sequential pointer flips with watermark-replay recovery."""
+    Commit is *jointly atomic*: the single ``DatasetManifest`` pointer flip
+    publishes every staged table at once, and the per-table pointers are
+    converged afterwards (``repair()`` heals a crash mid-convergence). A
+    failure raised by ``commit`` must not lead to ``abort``: once the
+    manifest has flipped, the staged directories are live data."""
 
-    def __init__(self, manifest: DatasetManifest | None = None) -> None:
+    def __init__(self, manifest: DatasetManifest) -> None:
         self._staged: list[tuple[ParquetTarget, str, MergeStats]] = []
-        self._done = False
         self.manifest = manifest
 
     def stage(self, target: ParquetTarget, version: str, stats: MergeStats) -> None:
         self._staged.append((target, version, stats))
 
-    def commit(self) -> list[MergeStats]:
-        if self.manifest is not None:
-            self.manifest.commit(
-                {os.path.abspath(t.path): v for t, v, _ in self._staged}
-            )
-            # the dataset is now durably committed; pointer convergence
-            # below is best-effort and replayable via manifest.repair()
-            self.manifest.repair()
-            out = [stats for _, _, stats in self._staged]
-            self._done = True
-            return out
-        out = []
-        for target, version, stats in self._staged:
-            target._commit(version)
-            out.append(stats)
-        self._done = True
-        return out
+    def commit(self) -> None:
+        self.manifest.commit({os.path.abspath(t.path): v for t, v, _ in self._staged})
+        # the dataset is now durably committed; pointer convergence below
+        # is best-effort and replayable via manifest.repair()
+        self.manifest.repair()
 
     def abort(self) -> None:
         for target, version, _ in self._staged:
             shutil.rmtree(os.path.join(target.path, version), ignore_errors=True)
         self._staged.clear()
-        self._done = True

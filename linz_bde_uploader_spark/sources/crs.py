@@ -141,10 +141,8 @@ def read_crs_header(path: str, max_header_lines: int = 10000) -> CrsHeader:
 def read_crs(
     spark: SparkSession,
     path: str | list[str],
-    header: CrsHeader | None = None,
     cast: bool = True,
     max_errors: int = 0,
-    validate: bool = True,
 ) -> tuple[DataFrame, CrsHeader]:
     """Read a .crs file (or several with identical headers) into a DataFrame.
 
@@ -154,17 +152,16 @@ def read_crs(
     typing to the target table — schema negotiation does the same here).
 
     Rows whose field count doesn't match the header (``column_count`` error
-    class, P8) are excluded from the result; with ``validate=True`` they are
-    counted eagerly and ``ErrorBudgetExceeded`` is raised when the count
-    exceeds ``max_errors`` (reference: bde_copy error budget,
-    conf/linz_bde_uploader.conf:359-376 and max_file_errors handling at
-    lib/LINZ/BdeUpload.pm:1164-1178). Value-level casts are ``try_cast`` so
-    a single bad cell nulls out rather than aborting a 100-TB job (the
-    date-range error class is the cleaner's job, not the reader's).
+    class, P8) are excluded from the result; they are counted eagerly and
+    ``ErrorBudgetExceeded`` is raised when the count exceeds ``max_errors``
+    (reference: bde_copy error budget, conf/linz_bde_uploader.conf:359-376
+    and max_file_errors handling at lib/LINZ/BdeUpload.pm:1164-1178).
+    Value-level casts are ``try_cast`` so a single bad cell nulls out rather
+    than aborting a 100-TB job (the date-range error class is the cleaner's
+    job, not the reader's).
     """
     paths = [path] if isinstance(path, str) else list(path)
-    if header is None:
-        header = read_crs_header(paths[0])
+    header = read_crs_header(paths[0])
     if not header.columns:
         raise ValueError(f"{paths[0]}: header declares no COLUMN records")
 
@@ -193,14 +190,13 @@ def read_crs(
     # column_count validation: a valid row has a trailing '|', so it splits
     # into n_fields + 1 pieces with an empty last piece.
     n_ok = F.size(F.split(F.col("value"), r"\|")) == len(header.columns) + 1
-    if validate:
-        n_bad = data.filter(~n_ok).count()
-        if n_bad > max_errors:
-            from linz_bde_uploader_spark.operators.clean import ErrorBudgetExceeded
+    n_bad = data.filter(~n_ok).count()
+    if n_bad > max_errors:
+        from linz_bde_uploader_spark.operators.clean import ErrorBudgetExceeded
 
-            raise ErrorBudgetExceeded(
-                f"{paths}: {n_bad} column_count errors exceeds max_errors={max_errors}"
-            )
+        raise ErrorBudgetExceeded(
+            f"{paths}: {n_bad} column_count errors exceeds max_errors={max_errors}"
+        )
     data = data.filter(n_ok)
     parts = F.split(F.col("value"), r"\|")
     cols = []

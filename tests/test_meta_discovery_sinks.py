@@ -480,7 +480,10 @@ def test_dataset_transaction_all_or_nothing(spark, tmp_path):
     """Two tables staged in one dataset txn: a tolerance abort on the
     second leaves BOTH at their previous versions (reference per-dataset
     transaction rollback, lib/LINZ/BdeDatabase.pm:476-510)."""
-    from linz_bde_uploader_spark.sinks.target import DatasetTransaction
+    from linz_bde_uploader_spark.sinks.target import (
+        DatasetManifest,
+        DatasetTransaction,
+    )
 
     ta = ParquetTarget(str(tmp_path / "ta"), key="id")
     tb = ParquetTarget(str(tmp_path / "tb"), key="id")
@@ -488,8 +491,9 @@ def test_dataset_transaction_all_or_nothing(spark, tmp_path):
     ta.replace(df4)
     tb.replace(df4)
     va, vb = ta.current_version(), tb.current_version()
+    man = DatasetManifest(str(tmp_path / "_manifest"))
 
-    txn = DatasetTransaction()
+    txn = DatasetTransaction(man)
     keys = spark.createDataFrame([(i,) for i in range(4)], "id long")
     good_inc = spark.createDataFrame([(0, "y"), (1, "x"), (2, "x"), (3, "x")],
                                      "id long, v string")
@@ -505,7 +509,7 @@ def test_dataset_transaction_all_or_nothing(spark, tmp_path):
     assert {r.v for r in ta.read(spark).collect()} == {"x"}
 
     # the happy path commits both together
-    txn2 = DatasetTransaction()
+    txn2 = DatasetTransaction(man)
     v1, s1 = ta.stage_incremental(spark, good_inc, keys)
     v2, s2 = tb.stage_incremental(spark, good_inc, keys)
     txn2.stage(ta, v1, s1)
