@@ -292,8 +292,8 @@ def q_c9_tolerance(spark, sf_dir):
     # versioned target whose current version was seeded once per sf_dir
     # (the level-0 load is q_s5's job; this query measures the gate). The
     # merge lineage runs exactly once — inside the staged write — and the
-    # gate's own counts (materialized parquet on both sides) are reused
-    # via ``last_gate``, never recomputed.
+    # gate's own counts (observed on that write) are reused via
+    # ``last_gate``, never recomputed.
     path = _C9_TARGETS.get(sf_dir)
     tgt = ParquetTarget(path or tempfile.mkdtemp(prefix="bde_c9_"),
                         key="o_orderkey")

@@ -5,10 +5,9 @@ Reimplements, Spark-first, the reference's incremental-merge semantics
 the external ``table_version`` apply/diff kernel it calls at :1762-1765 and
 :1914-1928):
 
-- **Change classification** (J1–J3): given the *current* table, the
-  *incoming* snapshot, and the set of *changed keys*, recompute each key's
-  true action from data presence — the declared I/U/D in the change table is
-  advisory only (reference :2228-2368).
+- **Change classification** (J1–J3, J6): one full-outer compare by key,
+  ``_classify``, recomputes each key's true action from data presence — the
+  declared I/U/D in a change table is advisory only (reference :2228-2368).
 
   =====  =============================================================
   ``D``  key exists in current, absent from incoming      (:2228-2259)
@@ -21,6 +20,13 @@ the external ``table_version`` apply/diff kernel it calls at :1762-1765 and
   ``U``  present in both, some non-unique column differs  (:2351)
   =====  =============================================================
 
+  Two wrappers call it. ``classify_incremental_changes`` (level 5) first
+  restricts both sides to the change keys with a left-semi join; the
+  reference spends three statements on the same decision (J1 deletes, J2
+  inserts, J3 updates). ``full_table_diff`` (J6,
+  ``ver_apply_table_differences``, for ``-full-incremental`` loads where no
+  change table exists) compares every row and drops the ``0`` rows.
+
 - **Key-swap repair** (J4, reference :2146-2223): when a row's primary key
   changed but an alternate unique column still matches an existing row, the
   *old* key must be pulled into the change set (else the insert of the new
@@ -31,17 +37,18 @@ the external ``table_version`` apply/diff kernel it calls at :1762-1765 and
   ``left_anti`` + ``union`` so it runs on any sink (parquet/Delta/JDBC);
   for a Delta sink the same action set folds 1:1 into ``MERGE INTO``.
 
-- **Full-table diff** (J6, ``ver_apply_table_differences`` semantics): a
-  full-outer compare by key classifying I/U/D, for ``-full-incremental``
-  loads where no change table exists.
+- **Counters and key gate**: ``merge_stats`` counts the actions in one
+  aggregate and, in the same pass, rejects a key that carries more than
+  one action row or is NULL.
 
-Scale posture (100 TB): every operator is a pure DataFrame expression —
-Catalyst chooses broadcast for the (small) change-key set, sort-merge + AQE
-skew-split for the large current×incoming compare; the null-safe
-all-columns compare stays in whole-stage codegen (``<=>`` chains), no
-Python in the row path. The classification output ``(key, action)`` is
-narrow (two columns), so shuffles carry minimal payload; the wide incoming
-rows are only shuffled once, in the final apply join.
+Scale posture (100 TB): every operator is a pure DataFrame expression. The
+compare is one sort-merge full-outer join under AQE (skew-split), with the
+level-5 change keys semi-joined into both sides first (broadcast by AQE
+when the key set is small); the null-safe all-columns compare stays in
+whole-stage codegen (``<=>`` chains), no Python in the row path. The
+classification output ``(key, action)`` is narrow (two columns), so later
+shuffles carry minimal payload; the wide incoming rows are only shuffled
+once more, in the final apply join.
 """
 
 from __future__ import annotations
@@ -83,18 +90,11 @@ class KeyValidityError(ValueError):
 _INTEGRAL_KEY_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
-def validate_key_column(
-    df: DataFrame, key: str, check_unique: bool = False
-) -> None:
-    """Key validity gate (reference :2839-2877): the key must exist and be
-    a single integral column; with ``check_unique`` it must also be
-    NOT NULL and unique in ``df``.
-
-    The schema half is free (no job). The data half is one aggregate pass
-    (count / count(key) / approx-free distinct) — the reference gets it
-    free from catalog constraints, a lakehouse table has none, so it is
-    opt-in: run it on first registration or after backfills, not per
-    merge."""
+def validate_key_column(df: DataFrame, key: str) -> None:
+    """Key validity gate, schema half (reference :2839-2877): the key must
+    exist and be a single integral column. Free — no job. The data half
+    (NOT NULL and unique) is checked by ``merge_stats`` on the actions of
+    every merge."""
     dtype = dict(df.dtypes).get(key)
     if dtype is None:
         raise KeyValidityError(
@@ -105,21 +105,6 @@ def validate_key_column(
             f"key column {key!r} must be an integral type "
             f"(reference gate), got {dtype}"
         )
-    if check_unique:
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(key).alias("n_notnull"),
-            F.countDistinct(key).alias("n_distinct"),
-        ).first()
-        if r.n_notnull < r.n:
-            raise KeyValidityError(
-                f"key column {key!r} has {r.n - r.n_notnull} NULLs"
-            )
-        if r.n_distinct < r.n_notnull:
-            raise KeyValidityError(
-                f"key column {key!r} has "
-                f"{r.n_notnull - r.n_distinct} duplicate values"
-            )
 
 
 def _all_equal_nullsafe(left: str, right: str, cols: list[str]) -> Column:
@@ -146,6 +131,35 @@ def _any_differs(left: str, right: str, cols: list[str]) -> Column:
     )
 
 
+def _classify(
+    current: DataFrame,
+    incoming: DataFrame,
+    key: str,
+    unique_cols: list[str] | None = None,
+) -> DataFrame:
+    """Full-outer compare by key → ``(key, _action)`` with I/D/0/X/U, one
+    row per joined pair (a key held twice on a side yields two rows, which
+    ``merge_stats`` rejects)."""
+    compare_cols = [c for c in current.columns if c != key]
+    unique_cols = [c for c in (unique_cols or []) if c != key]
+
+    cur = current.alias("cur")
+    inc = incoming.alias("inc")
+    joined = cur.join(inc, F.col(f"cur.{key}") == F.col(f"inc.{key}"), "full_outer")
+    action = (
+        F.when(F.col(f"cur.{key}").isNull(), F.lit(ACT_INSERT))
+        .when(F.col(f"inc.{key}").isNull(), F.lit(ACT_DELETE))
+        .when(_all_equal_nullsafe("cur", "inc", compare_cols), F.lit(ACT_NULL_UPDATE))
+    )
+    if unique_cols:
+        action = action.when(_any_differs("cur", "inc", unique_cols), F.lit(ACT_KEY_SWAP))
+    action = action.otherwise(F.lit(ACT_UPDATE))
+    return joined.select(
+        F.coalesce(F.col(f"cur.{key}"), F.col(f"inc.{key}")).alias(key),
+        action.alias(ACTION_COL),
+    )
+
+
 def classify_incremental_changes(
     current: DataFrame,
     incoming: DataFrame,
@@ -156,52 +170,22 @@ def classify_incremental_changes(
     """Classify each changed key into I/U/D/0/X → DataFrame ``(key, _action)``.
 
     ``change_keys`` is a one-column (``key``) DataFrame of keys named in the
-    change table for this target (already filtered by tablename and
-    deduplicated — reference :1686-1717 does the same projection first and
-    calls it a manual predicate pushdown; here Catalyst would push it anyway
-    but we keep the narrow shape so the key set broadcasts).
+    change table for this target (already filtered by tablename — reference
+    :1686-1717 does the same projection first and calls it a manual
+    predicate pushdown). Both sides are restricted to those keys with a
+    left-semi join, then compared by ``_classify``; a changed key present
+    on neither side yields no row.
     """
-    compare_cols = [c for c in current.columns if c != key]
-    unique_cols = [c for c in (unique_cols or []) if c != key]
-
     # No forced broadcast: a level-5 day at scale can be a large fraction of
     # the table, and a forced broadcast of billions of keys is an OOM. AQE
     # picks broadcast automatically when the key set is actually small.
-    chg = change_keys.select(key).distinct()
-
-    cur_keys = current.select(key)
-    inc_keys = incoming.select(key)
-
-    # J1 — deletes: in change set, in current, not in incoming (:2228-2259)
-    deletes = (
-        chg.join(cur_keys, key, "left_semi")
-        .join(inc_keys, key, "left_anti")
-        .withColumn(ACTION_COL, F.lit(ACT_DELETE))
+    chg = change_keys.select(key)
+    return _classify(
+        current.join(chg, key, "left_semi"),
+        incoming.join(chg, key, "left_semi"),
+        key,
+        unique_cols,
     )
-
-    # J2 — inserts: in change set, in incoming, not in current (:2264-2295)
-    inserts = (
-        chg.join(inc_keys, key, "left_semi")
-        .join(cur_keys, key, "left_anti")
-        .withColumn(ACTION_COL, F.lit(ACT_INSERT))
-    )
-
-    # J3 — updates: 3-way join + null-safe column compare (:2300-2368)
-    cur = current.alias("cur")
-    inc = incoming.alias("inc")
-    both = (
-        chg.alias("chg")
-        .join(cur, F.col(f"chg.{key}") == F.col(f"cur.{key}"), "inner")
-        .join(inc, F.col(f"chg.{key}") == F.col(f"inc.{key}"), "inner")
-    )
-    null_update = _all_equal_nullsafe("cur", "inc", compare_cols)
-    action = F.when(null_update, F.lit(ACT_NULL_UPDATE))
-    if unique_cols:
-        action = action.when(_any_differs("cur", "inc", unique_cols), F.lit(ACT_KEY_SWAP))
-    action = action.otherwise(F.lit(ACT_UPDATE))
-    updates = both.select(F.col(f"chg.{key}").alias(key), action.alias(ACTION_COL))
-
-    return deletes.unionByName(inserts).unionByName(updates)
 
 
 def keyswap_repair(
@@ -245,7 +229,13 @@ def keyswap_repair(
 
 
 def merge_stats(actions: DataFrame) -> MergeStats:
-    """Count per-action rows in one pass (single job, map-side partial agg)."""
+    """Count per-action rows, and gate the key, in one aggregate (map-side
+    partial agg plus a distinct count of the key).
+
+    Raises ``KeyValidityError`` when a key carries more than one action row
+    (it occurs twice in the current or incoming rows the merge touches) or
+    is NULL — before anything is written."""
+    key = next(c for c in actions.columns if c != ACTION_COL)
     row = actions.agg(
         F.count(F.when(F.col(ACTION_COL) == ACT_INSERT, 1)).alias("ni"),
         F.count(
@@ -253,7 +243,20 @@ def merge_stats(actions: DataFrame) -> MergeStats:
         ).alias("nu"),
         F.count(F.when(F.col(ACTION_COL) == ACT_NULL_UPDATE, 1)).alias("n0"),
         F.count(F.when(F.col(ACTION_COL) == ACT_DELETE, 1)).alias("nd"),
+        F.count(F.lit(1)).alias("n"),
+        F.count(key).alias("n_key"),
+        F.countDistinct(key).alias("n_distinct"),
     ).collect()[0]
+    if row.n_key < row.n:
+        raise KeyValidityError(
+            f"key column {key!r} is not unique: {row.n - row.n_key} "
+            f"action rows have a NULL key"
+        )
+    if row.n_distinct < row.n:
+        raise KeyValidityError(
+            f"key column {key!r} is not unique: {row.n} action rows "
+            f"for {row.n_distinct} distinct keys"
+        )
     return MergeStats(ninsert=row.ni, nupdate=row.nu, nnullupdate=row.n0, ndelete=row.nd)
 
 
@@ -301,21 +304,6 @@ def full_table_diff(
     output is narrow. At 100 TB this is the optimal shape — the compare
     must see every row once, and nothing is re-shuffled afterwards.
     """
-    compare_cols = [c for c in current.columns if c != key]
-
-    cur = current.alias("cur")
-    inc = incoming.alias("inc")
-    joined = cur.join(inc, F.col(f"cur.{key}") == F.col(f"inc.{key}"), "full_outer")
-    action = (
-        F.when(F.col(f"cur.{key}").isNull(), F.lit(ACT_INSERT))
-        .when(F.col(f"inc.{key}").isNull(), F.lit(ACT_DELETE))
-        .when(_any_differs("cur", "inc", compare_cols), F.lit(ACT_UPDATE))
-    )  # else NULL → unchanged
-    return (
-        joined.select(
-            F.coalesce(F.col(f"cur.{key}"), F.col(f"inc.{key}")).alias(key),
-            action.alias(ACTION_COL),
-        )
-        .filter(F.col(ACTION_COL).isNotNull())
+    return _classify(current, incoming, key).filter(
+        F.col(ACTION_COL) != ACT_NULL_UPDATE
     )
-

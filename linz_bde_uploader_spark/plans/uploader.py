@@ -41,6 +41,7 @@ from linz_bde_uploader_spark.sinks.target import (
 from linz_bde_uploader_spark.sources.crs import read_crs
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 CHANGE_TABLE_NAME = "l5_change_table"
 
@@ -291,7 +292,9 @@ class BdeUploader:
 
     def _load_files(self, ds: discovery.DatasetRef, d: TableDef, prev_details: dict[str, str]):
         """Read+clean+negotiate one table's files in a dataset. Returns
-        (DataFrame, details-string, continuity-status)."""
+        (DataFrame, details-string, continuity-status, file schema) — the
+        file schema is the first header's types under the ``COLUMN``
+        override names, if any."""
         frames = []
         details = "BdeUpload"
         continuity = "ok"
@@ -321,7 +324,13 @@ class BdeUploader:
         for c, dt in out.dtypes:
             if dt == "string":
                 out = out.withColumn(c, clean_text(F.col(c), self.clean_cfg))
-        return out, details, continuity, header0
+        schema = header0.schema
+        if d.column_overrides:
+            schema = T.StructType([
+                T.StructField(name, f.dataType, f.nullable)
+                for name, f in zip(d.column_overrides, schema)
+            ])
+        return out, details, continuity, schema
 
     def run_level0(
         self,
@@ -460,10 +469,10 @@ class BdeUploader:
         )
         self.meta.acquire_table_lock(tbl_id, upl_id)
         t0 = time.monotonic()
-        df, details, cont, hdr = self._load_files(ds, d, prev)
+        df, details, cont, file_schema = self._load_files(ds, d, prev)
         target = ParquetTarget(f"{self.target_root}/{d.name}", key=d.key_column)
         # first load: the file header defines the table
-        schema = target.read(self.spark).schema if target.exists() else hdr.schema
+        schema = target.read(self.spark).schema if target.exists() else file_schema
         negotiated = negotiate_columns(df, schema)
         version, stats, incremental = stage(d, target, negotiated)
         txn.stage(target, version, stats)

@@ -41,7 +41,8 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from linz_bde_uploader_spark.operators.diff import (
     KeyValidityError,
@@ -58,6 +59,27 @@ from linz_bde_uploader_spark.operators.tolerance import check_row_tolerance
 CURRENT_MARKER = "_CURRENT"
 
 
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count observed on whichever action runs it."""
+    seen = Observation()
+    return df.observe(seen, F.count(F.lit(1)).alias("n")), seen
+
+
+def _rows_seen(seen: Observation) -> int:
+    """The observed row count. AQE drops a query stage that came out empty
+    from the final plan, and the stage's observed metrics with it: an
+    observation without metrics saw no rows."""
+    return seen.get["n"] if seen._jo.getRow().length() else 0
+
+
+def _written_rows(df: DataFrame, path: str) -> int:
+    """Write ``df`` as parquet to ``path``; return the rows written,
+    observed on the write itself (no second pass)."""
+    df, seen = _counted(df)
+    df.write.mode("overwrite").parquet(path)
+    return _rows_seen(seen)
+
+
 class ParquetTarget:
     """A versioned parquet-directory table with atomic pointer commits."""
 
@@ -65,8 +87,8 @@ class ParquetTarget:
         self.path = path
         self.key = key
         #: ToleranceResult of the most recent gated stage on this instance
-        #: (old/new counts + thresholds + tier) — exposed so callers never
-        #: re-count what the gate already materialized.
+        #: (old/new counts + thresholds + tier). The counts are observed on
+        #: the staged write itself, so callers never re-count them.
         self.last_gate = None
         os.makedirs(path, exist_ok=True)
 
@@ -177,12 +199,10 @@ class ParquetTarget:
 
     def stage_replace(self, incoming: DataFrame) -> tuple[str, MergeStats]:
         """Phase-1 of a level-0 full replace (reference :1949-1973): write
-        the snapshot as an uncommitted version; ninsert = written count."""
+        the snapshot as an uncommitted version; ninsert = the rows the
+        write saw, observed on the write itself (one pass)."""
         v, d = self._new_version()
-        incoming.write.mode("overwrite").parquet(d)
-        # Count the written files, not the input lineage — one job total.
-        n = incoming.sparkSession.read.parquet(d).count()
-        return v, MergeStats(ninsert=n)
+        return v, MergeStats(ninsert=_written_rows(incoming, d))
 
     def replace(self, incoming: DataFrame) -> MergeStats:
         v, stats = self.stage_replace(incoming)
@@ -191,26 +211,31 @@ class ParquetTarget:
 
     def _stage_gated(
         self,
-        spark: SparkSession,
         current: DataFrame,
         actions: DataFrame,
         incoming: DataFrame,
         row_tol_error: float | None,
         row_tol_warning: float | None,
     ) -> tuple[str, MergeStats]:
+        """Count and key-gate the actions (``merge_stats`` raises on a
+        duplicated or NULL key before any version directory exists), then
+        write the merge once. The write carries both gate counts: ``old_n``
+        is observed on ``current`` as the merge reads it, ``new_n`` on the
+        merged rows as they are written. A failed conservation or tolerance
+        gate deletes the staged version; the previous version stays live."""
         stats = merge_stats(actions)
+        current, seen = _counted(current)
         merged = apply_changes(current, incoming, actions, self.key)
         v, d = self._new_version()
-        merged.write.mode("overwrite").parquet(d)
-        old_n = current.count()
-        new_n = spark.read.parquet(d).count()
+        new_n = _written_rows(merged, d)
+        old_n = _rows_seen(seen)
         try:
             # Conservation: a keyed merge adds one row per insert and drops
-            # one per delete. Any other count means a key occurs more than
-            # once in the current or incoming rows it touched. A key that is
-            # new to a full-incremental load and duplicated classifies as
-            # two inserts and still conserves; validate_key_column(
-            # check_unique=True) is the gate for that case.
+            # one per delete. One action row per key (merge_stats' gate)
+            # implies it, with one exception the gate cannot see: a key held
+            # twice in current whose copy equal to the incoming row
+            # classified '0' and was dropped by full_table_diff. Any other
+            # miss means the write lost or added rows.
             expected = old_n + stats.ninsert - stats.ndelete
             if new_n != expected:
                 raise KeyValidityError(
@@ -236,11 +261,12 @@ class ParquetTarget:
         row_tol_warning: float | None = None,
     ) -> tuple[str, MergeStats]:
         """Phase-1 of the level-5 merge (reference :1576-1814): key-swap
-        repair → classify I/U/D/0/X → apply → conservation and tolerance
-        gates. The merged result is materialized before the gates count it
-        (single materialization); a duplicated key or an error-tier
-        violation deletes the staged version and raises — the previous
-        version stays live."""
+        repair → classify I/U/D/0/X → key gate → apply → conservation and
+        tolerance gates. The merged result is written once and the gates'
+        row counts are observed on that write; a duplicated or NULL key
+        raises before anything is written, and an error-tier violation
+        deletes the staged version and raises — the previous version stays
+        live."""
         if self.key is None:
             raise ValueError("incremental apply requires a key column")
         current = self.read(spark)
@@ -252,7 +278,7 @@ class ParquetTarget:
             current, incoming, change_keys, self.key, unique_cols=unique_cols
         )
         return self._stage_gated(
-            spark, current, actions, incoming, row_tol_error, row_tol_warning
+            current, actions, incoming, row_tol_error, row_tol_warning
         )
 
     def apply_incremental(self, spark, incoming, change_keys,
@@ -279,7 +305,7 @@ class ParquetTarget:
         validate_key_column(incoming, self.key)  # schema gate, no job
         actions = full_table_diff(current, incoming, self.key)
         return self._stage_gated(
-            spark, current, actions, incoming, row_tol_error, row_tol_warning
+            current, actions, incoming, row_tol_error, row_tol_warning
         )
 
 

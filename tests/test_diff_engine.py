@@ -166,8 +166,9 @@ def test_declared_actions_are_advisory(spark, scenario):
 
 def test_key_validity_gate(spark, tmp_path):
     """Reference key gate (sql/02-bde_control_functions.sql.in:2839-2877):
-    single integral column; with check_unique also NOT NULL + unique. The
-    sink's incremental paths enforce the schema half before any job."""
+    single integral column, NOT NULL and unique. The sink's incremental
+    paths enforce the schema half before any job, and the data half on the
+    merge's actions before anything is written."""
     from linz_bde_uploader_spark.operators.diff import (
         KeyValidityError,
         validate_key_column,
@@ -176,19 +177,12 @@ def test_key_validity_gate(spark, tmp_path):
 
     good = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     validate_key_column(good, "id")                      # integral: ok
-    validate_key_column(good, "id", check_unique=True)   # unique + not null
 
     import pytest as _pt
     with _pt.raises(KeyValidityError, match="not present"):
         validate_key_column(good, "nope")
     with _pt.raises(KeyValidityError, match="integral"):
         validate_key_column(good, "v")
-    dupes = spark.createDataFrame([(1,), (1,)], "id long")
-    with _pt.raises(KeyValidityError, match="duplicate"):
-        validate_key_column(dupes, "id", check_unique=True)
-    nulls = spark.createDataFrame([(1,), (None,)], "id long")
-    with _pt.raises(KeyValidityError, match="NULL"):
-        validate_key_column(nulls, "id", check_unique=True)
 
     # the sink refuses a non-integral key before running any job
     tgt = ParquetTarget(str(tmp_path / "t"), key="v")
@@ -214,3 +208,86 @@ def test_key_validity_gate(spark, tmp_path):
         tgt.stage_full_incremental(spark, twice)
     assert tgt.current_version() == live
     assert tgt.versions() == [live]
+
+    # a key carrying two action rows (or a NULL one) is refused before any
+    # version directory exists: (a) new to a full-incremental load and
+    # twice in the snapshot, (b) a level-5 insert whose key occurs twice,
+    # (c) a level-5 delete of a key the current version holds twice; (d)
+    # a full-incremental load drops the '0' row of the held-twice key's
+    # unchanged copy, so only conservation sees that one
+    new_twice = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "p"), (3, "q")], "id long, v string"
+    )
+    key3 = spark.createDataFrame([(3,)], "id long")
+    held_twice = ParquetTarget(str(tmp_path / "h"), key="id")
+    held_twice.replace(
+        spark.createDataFrame([(1, "a"), (1, "z"), (2, "b")], "id long, v string")
+    )
+    cases = [
+        (tgt, lambda: tgt.stage_full_incremental(spark, new_twice)),            # (a)
+        (tgt, lambda: tgt.stage_incremental(spark, new_twice, key3)),           # (b)
+        (held_twice, lambda: held_twice.stage_incremental(                      # (c)
+            spark, spark.createDataFrame([(2, "b")], "id long, v string"), keys)),
+        (tgt, lambda: tgt.stage_full_incremental(spark, spark.createDataFrame(
+            [(1, "a"), (2, "b"), (None, "z")], "id long, v string"))),         # NULL
+        (held_twice, lambda: held_twice.stage_full_incremental(spark, good)),   # (d)
+    ]
+    for target, stage in cases:
+        live = target.current_version()
+        with _pt.raises(KeyValidityError, match="'id' is not unique"):
+            stage()
+        assert target.current_version() == live
+        assert target.versions() == [live]
+
+
+def _stage_all(spark, scenario, tgt):
+    """Every stage path over the scenario fixture: the level-0 replace of
+    ``current``, then a level-5 merge and a full-incremental diff of
+    ``incoming`` over it. Yields (method, previous version, staged
+    version, stats)."""
+    current, incoming, change_keys = scenario
+    v, stats = tgt.stage_replace(current)
+    tgt._commit(v)
+    yield "stage_replace", None, v, stats
+    for name, args in (
+        ("stage_incremental", (incoming, change_keys)),
+        ("stage_full_incremental", (incoming,)),
+    ):
+        prev = tgt.current_version()
+        v, stats = getattr(tgt, name)(spark, *args)
+        yield name, prev, v, stats
+
+
+def test_gate_counts_come_from_the_staged_write(spark, scenario, tmp_path, monkeypatch):
+    """The gate's old/new counts and the replace's ninsert are observed on
+    the staged write: they equal direct counts of the versions, and no
+    stage path runs ``DataFrame.count``."""
+    from linz_bde_uploader_spark.sinks.target import ParquetTarget
+
+    tgt = ParquetTarget(str(tmp_path / "t"), key="audit_id")
+    for name, prev, v, stats in _stage_all(spark, scenario, tgt):
+        written = tgt.read_version(spark, v).count()
+        if prev is None:
+            assert stats.ninsert == written == 3
+        else:
+            assert tgt.last_gate.old_count == tgt.read_version(spark, prev).count()
+            assert tgt.last_gate.new_count == written == 4, name
+
+    # an empty current version: AQE drops the empty stage, and its observed
+    # metrics with it, from the final plan
+    empty = ParquetTarget(str(tmp_path / "e"), key="audit_id")
+    empty.replace(scenario[0].limit(0))
+    empty.stage_full_incremental(spark, scenario[1])
+    assert (empty.last_gate.old_count, empty.last_gate.new_count) == (0, 4)
+
+    def no_count(self):
+        raise AssertionError("a stage path ran DataFrame.count")
+
+    # the session's concrete DataFrame class: it overrides the base
+    # pyspark.sql.DataFrame.count
+    monkeypatch.setattr(type(scenario[0]), "count", no_count)
+    tgt = ParquetTarget(str(tmp_path / "u"), key="audit_id")
+    staged = {name: stats for name, _, _, stats in _stage_all(spark, scenario, tgt)}
+    assert staged["stage_replace"].ninsert == 3
+    assert (staged["stage_incremental"].ninsert, staged["stage_incremental"].ndelete) == (2, 1)
+    assert staged["stage_full_incremental"].nupdate == 1

@@ -173,3 +173,27 @@ def test_cli_override_locks(spark, tmp_path, capsys):
     assert main(["-full", "-override-locks", *common]) == 0
     assert "crs_parcel_bndry 20240101000000 L0: +3" in capsys.readouterr().out
     assert {r["id"]: r["status"] for r in meta._read("upload")} == {stale: "E", stale + 1: "C"}
+
+
+def test_column_overrides_define_the_first_load(spark, tmp_path):
+    """``COLUMN`` records rename a file's fields. On a table's first load
+    the header still gives the types, under the override names; the next
+    level-5 load merges by the renamed key."""
+    conf = (
+        "TABLE l5_change_table files xaud\n"
+        "TABLE crs_parcel_bndry key=par_id row_tol=0.20,0.95 files pab1\n"
+        "COLUMN par_id integer\nCOLUMN seq integer\n"
+        "COLUMN line_id integer\nCOLUMN aud_id integer\n"
+    )
+    up, _ = _uploader(spark, tmp_path, _write_repo(tmp_path), conf)
+    assert up.run_level0()[0].ninsert == 3
+    t = ParquetTarget(str(tmp_path / "tables" / "crs_parcel_bndry"), "par_id")
+    assert t.read(spark).dtypes == [
+        ("par_id", "int"), ("seq", "int"), ("line_id", "int"), ("aud_id", "int"),
+    ]
+    assert _rows(spark, t) == [(1, 1, 10, 1000), (2, 1, 20, 1001), (3, 2, 30, 1002)]
+    r = up.run_level5()[0]
+    assert (r.ninsert, r.nupdate, r.nnullupdate, r.ndelete) == (3, 1, 1, 1)
+    assert [row[:3] for row in _rows(spark, t)] == [
+        (1, 1, 11), (3, 2, 30), (4, 2, 40), (5, 3, 50), (6, 3, 60),
+    ]
