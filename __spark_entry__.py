@@ -1733,7 +1733,7 @@ def _hits_sql(iters: int = 4) -> str:
           GROUP BY e.dst
         )""")
         ctes.append(f"at{i} AS (SELECT round(sum(raw), 9) AS t FROM ar{i})")
-        ctes.append(f"""a{i} AS (
+        ctes.append(f"""a{i} AS MATERIALIZED (
           SELECT nd.node,
                  round(coalesce(r.raw, 0.0) / t.t, 9) AS auth
           FROM nodes nd CROSS JOIN at{i} t
@@ -1745,7 +1745,7 @@ def _hits_sql(iters: int = 4) -> str:
           GROUP BY e.src
         )""")
         ctes.append(f"ht{i} AS (SELECT round(sum(raw), 9) AS t FROM hr{i})")
-        ctes.append(f"""h{i} AS (
+        ctes.append(f"""h{i} AS MATERIALIZED (
           SELECT nd.node,
                  round(coalesce(r.raw, 0.0) / t.t, 9) AS hub
           FROM nodes nd CROSS JOIN ht{i} t

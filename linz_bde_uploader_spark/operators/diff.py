@@ -46,9 +46,14 @@ compare is one sort-merge full-outer join under AQE (skew-split), with the
 level-5 change keys semi-joined into both sides first (broadcast by AQE
 when the key set is small); the null-safe all-columns compare stays in
 whole-stage codegen (``<=>`` chains), no Python in the row path. The
-classification output ``(key, action)`` is narrow (two columns), so later
-shuffles carry minimal payload; the wide incoming rows are only shuffled
-once more, in the final apply join.
+classification output ``(key, action)`` is narrow (two columns, O(changed
+keys) rows). The staged write (``ParquetTarget._stage_gated``) persists it
+once, at a storage level that spills to disk, so ``merge_stats``' aggregate
+and ``apply_changes`` read the same materialised rows and the compare runs
+once per table load; the set is released on every exit, gate failures
+included. The wide rows are shuffled at most once more, in the apply joins,
+and not at all when AQE broadcasts the persisted set, whose size it then
+knows.
 """
 
 from __future__ import annotations

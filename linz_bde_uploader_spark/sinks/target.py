@@ -41,6 +41,7 @@ import shutil
 import time
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -90,6 +91,7 @@ class ParquetTarget:
         #: (old/new counts + thresholds + tier). The counts are observed on
         #: the staged write itself, so callers never re-count them.
         self.last_gate = None
+        self._read_memo: tuple[str, DataFrame] | None = None
         os.makedirs(path, exist_ok=True)
 
     # -- version plumbing ---------------------------------------------------
@@ -144,7 +146,14 @@ class ParquetTarget:
     # -- reads --------------------------------------------------------------
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._data_dir())
+        """The current version. Version directories are immutable, so the
+        frame is memoized per directory: each ``spark.read.parquet`` runs a
+        schema-inference job, and one table load reads the current version
+        for negotiation and again for its merge."""
+        d = self._data_dir()
+        if self._read_memo is None or self._read_memo[0] != d:
+            self._read_memo = (d, spark.read.parquet(d))
+        return self._read_memo[1]
 
     def versions(self) -> list[str]:
         """Committed-order list of version directory names (oldest first —
@@ -219,15 +228,24 @@ class ParquetTarget:
     ) -> tuple[str, MergeStats]:
         """Count and key-gate the actions (``merge_stats`` raises on a
         duplicated or NULL key before any version directory exists), then
-        write the merge once. The write carries both gate counts: ``old_n``
-        is observed on ``current`` as the merge reads it, ``new_n`` on the
-        merged rows as they are written. A failed conservation or tolerance
-        gate deletes the staged version; the previous version stays live."""
-        stats = merge_stats(actions)
-        current, seen = _counted(current)
-        merged = apply_changes(current, incoming, actions, self.key)
-        v, d = self._new_version()
-        new_n = _written_rows(merged, d)
+        write the merge once. The action set is classified once: it is
+        persisted (memory, spilling to disk; two columns, one row per
+        changed key) before ``merge_stats`` reads it, the write reads the
+        same rows, and it is released once the write ends or the key gate
+        raises, before the other gates run. The write carries both gate
+        counts: ``old_n`` is observed on ``current`` as the merge reads it,
+        ``new_n`` on the merged rows as they are written. A failed
+        conservation or tolerance gate deletes the staged version; the
+        previous version stays live."""
+        actions = actions.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            stats = merge_stats(actions)
+            current, seen = _counted(current)
+            merged = apply_changes(current, incoming, actions, self.key)
+            v, d = self._new_version()
+            new_n = _written_rows(merged, d)
+        finally:
+            actions.unpersist()
         old_n = _rows_seen(seen)
         try:
             # Conservation: a keyed merge adds one row per insert and drops

@@ -202,12 +202,14 @@ def test_key_validity_gate(spark, tmp_path):
         [(1, "x"), (1, "y"), (2, "b")], "id long, v string"
     )
     keys = spark.createDataFrame([(1,)], "id long")
+    cached = _persisted(spark)
     with _pt.raises(KeyValidityError, match="'id' is not unique"):
         tgt.stage_incremental(spark, twice, keys)
     with _pt.raises(KeyValidityError, match="'id' is not unique"):
         tgt.stage_full_incremental(spark, twice)
     assert tgt.current_version() == live
     assert tgt.versions() == [live]
+    assert _persisted(spark) == cached  # the action set is released
 
     # a key carrying two action rows (or a NULL one) is refused before any
     # version directory exists: (a) new to a full-incremental load and
@@ -238,6 +240,21 @@ def test_key_validity_gate(spark, tmp_path):
             stage()
         assert target.current_version() == live
         assert target.versions() == [live]
+        assert _persisted(spark) == cached
+
+
+def _persisted(spark) -> int:
+    """RDDs the session holds persisted."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _plan_nodes(plan):
+    """A logical plan's nodes, without the plans a node only describes
+    (an ``InMemoryRelation`` prints the plan it cached as an inner child)."""
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
 
 
 def _stage_all(spark, scenario, tgt):
@@ -291,3 +308,70 @@ def test_gate_counts_come_from_the_staged_write(spark, scenario, tmp_path, monke
     assert staged["stage_replace"].ninsert == 3
     assert (staged["stage_incremental"].ninsert, staged["stage_incremental"].ndelete) == (2, 1)
     assert staged["stage_full_incremental"].nupdate == 1
+
+
+def test_action_set_is_classified_once(spark, scenario, tmp_path, monkeypatch):
+    """The merged frame a stage writes reads its action set from the
+    persisted rows ``merge_stats`` counted, so the compare is not planned a
+    second time; the persisted set is released on success and on the
+    tolerance gate, and neither leaves a staged ``v-*``."""
+    from linz_bde_uploader_spark.operators.tolerance import RowToleranceError
+    from linz_bde_uploader_spark.sinks import target as T
+
+    written = {}
+    write = T._written_rows
+
+    def spy(df, path):
+        nodes = list(_plan_nodes(df._jdf.queryExecution().optimizedPlan()))
+        written["cached"] = any(n.nodeName() == "InMemoryRelation" for n in nodes)
+        written["joins"] = [str(n.joinType()) for n in nodes if n.nodeName() == "Join"]
+        return write(df, path)
+
+    monkeypatch.setattr(T, "_written_rows", spy)
+    cached = _persisted(spark)
+    tgt = T.ParquetTarget(str(tmp_path / "t"), key="audit_id")
+    for name, _, v, _ in _stage_all(spark, scenario, tgt):
+        assert _persisted(spark) == cached, name
+        if name != "stage_replace":
+            assert written["cached"], name
+            assert "FullOuter" not in written["joins"], (name, written["joins"])
+
+    # the tolerance error tier: 3 rows down to 1
+    incoming = scenario[1]
+    live, versions = tgt.current_version(), tgt.versions()
+    with pytest.raises(RowToleranceError):
+        tgt.stage_full_incremental(spark, incoming.limit(1), row_tol_error=0.5)
+    assert tgt.current_version() == live
+    assert tgt.versions() == versions
+    assert _persisted(spark) == cached
+
+
+def test_empty_change_keys_still_count_the_current_version(spark, scenario, tmp_path):
+    """A level-5 stage whose change-key set is empty reads an empty action
+    set; AQE prunes the empty stages, and ``old_n`` must still be the
+    current version's row count."""
+    from linz_bde_uploader_spark.operators.diff import MergeStats
+    from linz_bde_uploader_spark.sinks.target import ParquetTarget
+
+    current, incoming, change_keys = scenario
+    tgt = ParquetTarget(str(tmp_path / "t"), key="audit_id")
+    tgt.replace(current)
+    _, stats = tgt.stage_incremental(spark, incoming, change_keys.limit(0))
+    assert stats == MergeStats()
+    assert (tgt.last_gate.old_count, tgt.last_gate.new_count) == (3, 3)
+
+
+def test_read_is_memoized_per_version(spark, scenario, tmp_path):
+    """One table load reads the current version for negotiation and again
+    for its merge; the second read reuses the first frame (each fresh
+    parquet read runs a schema-inference job), and a commit moves it."""
+    from linz_bde_uploader_spark.sinks.target import ParquetTarget
+
+    current, incoming, _ = scenario
+    tgt = ParquetTarget(str(tmp_path / "t"), key="audit_id")
+    tgt.replace(current)
+    first = tgt.read(spark)
+    assert tgt.read(spark) is first
+    tgt.replace(incoming)
+    assert tgt.read(spark) is not first
+    assert tgt.read(spark).count() == 4
