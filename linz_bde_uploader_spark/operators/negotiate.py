@@ -4,10 +4,11 @@ The reference intersects the file-declared field names with the target
 table's actual columns, case-insensitively, preserving file field order, and
 loads only the intersection (``bde_SelectValidColumns``,
 /root/reference/sql/02-bde_control_functions.sql.in:1336-1375). Zero matching
-columns is a hard error (lib/LINZ/BdeUpload.pm:1031-1033). Config may
-override the header-declared columns per table (``COLUMN`` records,
-conf/tables.conf:50-53). Missing target columns take the target's column
-defaults (working copy created INCLUDING DEFAULTS, :1276-1279).
+columns is a hard error (lib/LINZ/BdeUpload.pm:1031-1033). Config
+``COLUMN`` records (conf/tables.conf:50-53) rename the file's fields before
+negotiation; the uploader applies them when it reads the files. Missing
+target columns take the target's column defaults (working copy created
+INCLUDING DEFAULTS, :1276-1279).
 """
 
 from __future__ import annotations
@@ -25,13 +26,10 @@ class NoMatchingColumnsError(ValueError):
 def negotiate_columns(
     df: DataFrame,
     target_schema: T.StructType,
-    column_overrides: list[str] | None = None,
     defaults: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Project ``df`` (file-shaped) onto ``target_schema``.
 
-    - ``column_overrides``: replaces the file's field names entirely
-      (positional), mirroring config ``COLUMN`` records.
     - keeps only file fields that exist in the target (case-insensitive);
     - casts each kept field to the target column's type (the reference lets
       PostgreSQL COPY do this parse);
@@ -40,13 +38,6 @@ def negotiate_columns(
     Output column order is the *target* order, ready for a positional sink.
     """
     file_cols = list(df.columns)
-    if column_overrides is not None:
-        if len(column_overrides) != len(file_cols):
-            raise ValueError(
-                f"column override count {len(column_overrides)} != file field count {len(file_cols)}"
-            )
-        df = df.toDF(*[c.lower() for c in column_overrides])
-        file_cols = list(df.columns)
 
     target_by_lower = {f.name.lower(): f for f in target_schema.fields}
     matched = {c.lower() for c in file_cols if c.lower() in target_by_lower}
@@ -68,10 +59,6 @@ def negotiate_columns(
         else:
             out.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(out)
-
-
-class SchemaDriftError(ValueError):
-    """Raised when a snapshot's schema drift violates the gate policy."""
 
 
 def schema_drift(prev_schema, new_schema) -> "list[dict]":
@@ -117,32 +104,3 @@ def schema_drift(prev_schema, new_schema) -> "list[dict]":
             })
     return findings
 
-
-def check_drift_policy(
-    findings: "list[dict]",
-    allow_added: bool = True,
-    allow_removed: bool = False,
-    allow_type_changed: bool = False,
-    allow_nullability: bool = True,
-) -> "list[dict]":
-    """Gate a drift report: additive evolution is safe by default
-    (negotiate_columns fills new target columns with NULL/defaults and
-    ignores extra file columns), while removals and type changes break
-    the keyed-merge contract and fail loudly. Returns the findings for
-    logging when the policy passes; raises :class:`SchemaDriftError`
-    naming every violation otherwise."""
-    allowed = {
-        "added": allow_added,
-        "removed": allow_removed,
-        "type_changed": allow_type_changed,
-        "nullability_changed": allow_nullability,
-    }
-    bad = [f for f in findings if not allowed[f["change"]]]
-    if bad:
-        desc = "; ".join(
-            f"{f['column']}: {f['change']}"
-            f" ({f['prev_type']} -> {f['new_type']})"
-            for f in bad
-        )
-        raise SchemaDriftError(f"schema drift violates policy: {desc}")
-    return findings

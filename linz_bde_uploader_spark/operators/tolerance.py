@@ -24,7 +24,7 @@ class ToleranceResult:
     new_count: int
     warning_threshold: int
     error_threshold: int
-    level: str  # 'ok' | 'warning' | 'error'
+    level: str  # 'ok' | 'warning' (the error tier raises)
 
     @property
     def ok(self) -> bool:
@@ -36,22 +36,16 @@ def check_row_tolerance(
     new_count: int,
     tol_error: float | None = None,
     tol_warning: float | None = None,
-    raise_on_error: bool = True,
 ) -> ToleranceResult:
     """Evaluate both tiers. Tolerances are ratios in [0,1]; ``None`` disables
-    a tier. ``ceil(count*tol)::bigint`` per the reference (:2064,2073)."""
+    a tier. ``ceil(count*tol)::bigint`` per the reference (:2064,2073). The
+    error tier raises :class:`RowToleranceError`."""
     err_thr = int(math.ceil(old_count * tol_error)) if tol_error is not None else 0
     warn_thr = int(math.ceil(old_count * tol_warning)) if tol_warning is not None else 0
     if tol_error is not None and new_count < err_thr:
-        level = "error"
-    elif tol_warning is not None and new_count < warn_thr:
-        level = "warning"
-    else:
-        level = "ok"
-    res = ToleranceResult(old_count, new_count, warn_thr, err_thr, level)
-    if level == "error" and raise_on_error:
         raise RowToleranceError(
             f"row count {new_count} below error tolerance {err_thr} "
             f"(= ceil({old_count} * {tol_error}))"
         )
-    return res
+    level = "warning" if tol_warning is not None and new_count < warn_thr else "ok"
+    return ToleranceResult(old_count, new_count, warn_thr, err_thr, level)

@@ -247,10 +247,6 @@ class BdeUploader:
         warn_tol_hours: float = 0.5,
         fail_tol_hours: float = 0.0,
         max_errors: int = 0,
-        registry=None,
-        events=None,
-        finish_sql: str = "",
-        sql_runner=None,
         override_locks: bool = False,
     ):
         self.spark = spark
@@ -262,33 +258,12 @@ class BdeUploader:
         self.warn_tol_hours = warn_tol_hours
         self.fail_tol_hours = fail_tol_hours
         self.max_errors = max_errors
-        self.registry = registry  # hooks.HookRegistry | None
-        self.events = events  # hooks.EventHooks | None
-        self.finish_sql = finish_sql
-        self.sql_runner = sql_runner or (lambda sql: spark.sql(sql))
         self.override_locks = override_locks  # -override-locks (C1)
         # Dataset-level commit point: every completed dataset publishes all
         # its table versions through ONE atomic manifest flip; repair() at
         # startup converges per-table pointers after a mid-flip crash.
         self.manifest = DatasetManifest(os.path.join(target_root, "_manifest"))
         self.manifest.repair()
-
-    def _fire(self, event: str, upl_id: int | None, dataset: str = "", level: str = ""):
-        if self.events is not None:
-            self.events.fire(event, upl_id, dataset, level)
-
-    def _post_hooks(self, upl_id: int, level: str) -> None:
-        """Post-level0 / post-upload function registry + conditional finish
-        SQL (reference lib/LINZ/BdeUpload.pm:811-821,842-872)."""
-        from linz_bde_uploader_spark.plans import hooks as H
-
-        if self.registry is not None:
-            ctx = H.HookContext(upl_id, self.meta, self.spark, level=level)
-            if level == "0":
-                self.registry.run_post_level0(ctx)
-            self.registry.run_post_upload(ctx)
-        if self.finish_sql:
-            H.run_finish_sql(self.finish_sql, self.sql_runner, self.meta, upl_id)
 
     def _load_files(self, ds: discovery.DatasetRef, d: TableDef, prev_details: dict[str, str]):
         """Read+clean+negotiate one table's files in a dataset. Returns
@@ -313,6 +288,11 @@ class BdeUploader:
                     continuity = "warning"
             details += f" {fname} {hdr.end or ''}"
             if d.column_overrides:
+                if len(d.column_overrides) != len(df.columns):
+                    raise ConfigError(
+                        f"{d.name}: {len(d.column_overrides)} COLUMN records "
+                        f"but {os.path.basename(p)} has {len(df.columns)} fields"
+                    )
                 df = df.toDF(*d.column_overrides)
             frames.append(df)
             header0 = header0 or hdr
@@ -404,9 +384,9 @@ class BdeUploader:
         return self._run("5", datasets, pending, stager)
 
     def _run(self, level: str, datasets, pending, stager) -> list[LoadReport]:
-        """The upload lifecycle both levels share: one upload row, the
-        start/error/finish events, then each dataset in name order as one
-        transaction, then the post-upload hooks.
+        """The upload lifecycle both levels share: one upload row, then
+        each dataset in name order as one transaction, then the upload's
+        final status (``C`` or ``E``).
 
         ``pending(table, status, dataset)`` says whether a table loads from
         a dataset; ``stager(dataset)`` returns the level's stage call,
@@ -416,7 +396,6 @@ class BdeUploader:
         ]
         reports: list[LoadReport] = []
         upl_id = self.meta.create_upload(override_locks=self.override_locks)
-        self._fire("start", upl_id, level=level)
         ok = True
         try:
             for ds in datasets:
@@ -442,15 +421,11 @@ class BdeUploader:
                 # the staged directories are live data.
                 txn.commit()
                 reports += [self._record(upl_id, ds, level, load) for load in loads]
-            if reports:
-                self._post_hooks(upl_id, level)
         except Exception:
             ok = False
-            self._fire("error", upl_id, level=level)
             raise
         finally:
             self.meta.finish_upload(upl_id, ok=ok)
-            self._fire("finish", upl_id, level=level)
         return reports
 
     def _stage_table(self, upl_id, ds, d: TableDef, pending, stage, txn):

@@ -17,6 +17,22 @@ from pyspark.sql import SparkSession
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set, else 24g
+    capped at three quarters of physical memory, so a large run cannot
+    grow the heap past what the machine has. 24g where ``sysconf`` cannot
+    tell the memory size."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "24g"
+    mib = phys * 3 // 4 // 2**20
+    return f"{mib}m" if 0 < mib < 24 * 1024 else "24g"
+
+
 def get_spark(app_name: str = "linz_bde_uploader_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the SparkSession.
@@ -51,7 +67,7 @@ def get_spark(app_name: str = "linz_bde_uploader_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         # GC note: default G1. ZGC was measured here and REJECTED — its
         # concurrent collector threads compete with local[32]'s fully
         # saturated executor threads (bench total regressed ~50%). The

@@ -54,13 +54,6 @@ def test_negotiate_zero_match_is_error(spark):
         negotiate_columns(df, TARGET)
 
 
-def test_negotiate_column_override(spark):
-    df = spark.createDataFrame([("5", "6")], ["x", "y"])
-    out = negotiate_columns(df, TARGET, column_overrides=["line_id", "seq"])
-    row = out.collect()[0]
-    assert row.line_id == 5 and row.seq == 6
-
-
 def test_clean_char_map(spark):
     df = spark.createDataFrame(
         [
@@ -193,12 +186,8 @@ def test_tolerance_tiers():
     assert ok.level == "ok"
     warn = check_row_tolerance(100, 75, tol_error=0.40, tol_warning=0.95)
     assert warn.level == "warning"
-    with pytest.raises(RowToleranceError):
+    with pytest.raises(RowToleranceError, match="error tolerance 40"):
         check_row_tolerance(100, 25, tol_error=0.40, tol_warning=0.95)
-    err = check_row_tolerance(
-        100, 25, tol_error=0.40, tol_warning=0.95, raise_on_error=False
-    )
-    assert err.level == "error" and err.error_threshold == 40
     disabled = check_row_tolerance(100, 0)
     assert disabled.level == "ok"
 
@@ -274,22 +263,3 @@ class TestSchemaDrift:
         assert "name" not in got
         # identical schemas -> no findings
         assert schema_drift(prev, prev) == []
-
-    def test_policy_gate(self):
-        import pytest as _pytest
-
-        from linz_bde_uploader_spark.operators.negotiate import (
-            SchemaDriftError, check_drift_policy, schema_drift,
-        )
-
-        prev, new = self._schemas()
-        findings = schema_drift(prev, new)
-        with _pytest.raises(SchemaDriftError, match="price: type_changed"):
-            check_drift_policy(findings)
-        with _pytest.raises(SchemaDriftError, match="old_flag: removed"):
-            check_drift_policy(findings, allow_type_changed=True)
-        # fully permissive passes and returns the findings for logging
-        out = check_drift_policy(
-            findings, allow_removed=True, allow_type_changed=True
-        )
-        assert out == findings

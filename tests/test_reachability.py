@@ -45,13 +45,8 @@ TEST_ONLY_ALLOWED = {
     "functions.sampling.quantile_filter_approx",
     "functions.text.unigram_lm_encode",
     "functions.text.unigram_lm_train",
-    "operators.negotiate.check_drift_policy",
     "operators.scd.scd2_as_of",
     "operators.skew.salted_agg",
-    # BdeUploader's registry= and events= extension points; no entry point
-    # (the CLI included) constructs one
-    "plans.hooks.EventHooks",
-    "plans.hooks.HookRegistry",
     # kept: a test uses each as the reference for live code
     "functions.dedup.winnow_fingerprints",  # for winnow_pairs
     "functions.sampling.deterministic_sample",

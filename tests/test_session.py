@@ -43,3 +43,22 @@ def test_python_udf_imports_package_outside_repo_root(tmp_path):
             proc.communicate()
     assert proc.returncode == 0, stderr[-2000:]
     assert "UDF 0.1.0" in stdout
+
+
+def test_driver_memory_default_is_capped_by_physical_memory(monkeypatch):
+    from linz_bde_uploader_spark.session import _driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    page = 4096
+    for gib, want in ((16, "12288m"), (64, "24g")):
+        sizes = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": gib * 2**30 // page}
+        monkeypatch.setattr(os, "sysconf", sizes.__getitem__)
+        assert _driver_memory() == want
+
+    def unknown(name):
+        raise ValueError(f"unrecognized configuration name {name}")
+
+    monkeypatch.setattr(os, "sysconf", unknown)
+    assert _driver_memory() == "24g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert _driver_memory() == "2g"

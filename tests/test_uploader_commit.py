@@ -12,7 +12,11 @@ import pytest
 
 from linz_bde_uploader_spark.meta.store import ActiveUploadError, MetaStore
 from linz_bde_uploader_spark.operators.tolerance import RowToleranceError
-from linz_bde_uploader_spark.plans.uploader import BdeUploader, parse_tables_conf
+from linz_bde_uploader_spark.plans.uploader import (
+    BdeUploader,
+    ConfigError,
+    parse_tables_conf,
+)
 from linz_bde_uploader_spark.sinks.target import DatasetManifest, ParquetTarget
 from tests.test_meta_discovery_sinks import UPLOADER_CONF, _write_repo
 
@@ -197,3 +201,26 @@ def test_column_overrides_define_the_first_load(spark, tmp_path):
     assert [row[:3] for row in _rows(spark, t)] == [
         (1, 1, 11), (3, 2, 30), (4, 2, 40), (5, 3, 50), (6, 3, 60),
     ]
+
+
+def test_column_count_mismatch_is_a_config_error(spark, tmp_path):
+    """``COLUMN`` records that do not match a file's field count stop the
+    load with a ``ConfigError`` naming the table, the file and both
+    counts. Nothing is published and the upload ends ``E``."""
+    repo = _write_repo(tmp_path)
+    up, meta = _uploader(spark, tmp_path, repo, UPLOADER_CONF)
+    up.run_level0()
+    t = _target(tmp_path, "crs_parcel_bndry")
+    old = t.current_version()
+    conf = UPLOADER_CONF + "COLUMN pri_id\nCOLUMN sequence\nCOLUMN lin_id\n"
+    up, meta = _uploader(spark, tmp_path, repo, conf)
+
+    with pytest.raises(
+        ConfigError, match=r"crs_parcel_bndry: 3 COLUMN records but pab1\.crs has 4 fields"
+    ):
+        up.run_level5()
+
+    assert t.current_version() == old and t.versions() == [old]
+    assert up.manifest.version_of(t.path) == old
+    assert meta.table_status("crs_parcel_bndry").last_upload_dataset == L0_OLD
+    assert {r["id"]: r["status"] for r in meta._read("upload")} == {1: "C", 2: "E"}
