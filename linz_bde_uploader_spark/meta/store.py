@@ -160,7 +160,6 @@ class MetaStore:
 
     def create_upload(
         self,
-        schema_name: str = "bde",
         allow_concurrent: bool = False,
         override_locks: bool = False,
         expiry_hours: float = 3.0,
@@ -186,7 +185,7 @@ class MetaStore:
         rows.append(
             {
                 "id": new_id,
-                "schema_name": schema_name,
+                "schema_name": "bde",
                 "start_time": now,
                 "end_time": now,
                 "status": "A",
@@ -261,7 +260,6 @@ class MetaStore:
     def register_table(
         self,
         table_name: str,
-        schema_name: str = "bde",
         key_column: str | None = None,
         row_tol_error: float | None = None,
         row_tol_warning: float | None = None,
@@ -271,7 +269,7 @@ class MetaStore:
         table_name = table_name.lower()
         rows = self._read("upload_table")
         for r in rows:
-            if r["table_name"] == table_name and r["schema_name"] == schema_name:
+            if r["table_name"] == table_name:
                 if key_column is not None:
                     r["key_column"] = key_column.lower()
                 if row_tol_error is not None:
@@ -284,7 +282,7 @@ class MetaStore:
         rows.append(
             {
                 "id": new_id,
-                "schema_name": schema_name,
+                "schema_name": "bde",
                 "table_name": table_name,
                 "key_column": key_column.lower() if key_column else None,
                 "last_upload_id": None,
@@ -326,12 +324,12 @@ class MetaStore:
         if changed:
             self._write("upload_table", rows)
 
-    def table_status(self, table_name: str, schema_name: str = "bde") -> TableStatus | None:
+    def table_status(self, table_name: str) -> TableStatus | None:
         """The planner's watermark read (bde_GetLastUploadStats analog,
         :103-132)."""
         table_name = table_name.lower()
         for r in self._read("upload_table"):
-            if r["table_name"] == table_name and r["schema_name"] == schema_name:
+            if r["table_name"] == table_name:
                 return TableStatus(
                     tbl_id=r["id"],
                     key_column=r["key_column"],

@@ -10,13 +10,15 @@ metadata stay on the driver — the same control/data split as the
 reference, with the data plane distributed.
 
 ``-full`` and ``-incremental`` share one run loop, as both go through
-``ApplyDatasetUpdates`` in the reference (lib/LINZ/BdeUpload.pm:716-840):
-each dataset, in name order, stages every pending table into one
-``DatasetTransaction`` and commits it with one manifest flip, and only
-then are the stats and watermarks written. A failure before the flip
-leaves every table of the dataset at its previous version. The levels
-differ only in which tables are pending, the stage call, and level 5's
-change table.
+``ApplyDatasetUpdates`` in the reference (lib/LINZ/BdeUpload.pm:716-840).
+A run plans first, as ``GetLevel0Updates`` / ``GetLevel5Updates`` do
+(:612-707): discovery lists each table's pending datasets once, and the
+lists are grouped per dataset. Each planned dataset, in name order, then
+stages its tables into one ``DatasetTransaction`` and commits it with one
+manifest flip, and only then are the stats and watermarks written. A
+failure before the flip leaves every table of the dataset at its previous
+version. The levels differ only in the planning rule, the stage call, and
+level 5's change table.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from datetime import datetime
 from pyspark.sql import SparkSession
 
 from linz_bde_uploader_spark.meta.store import MetaStore
-from linz_bde_uploader_spark.operators.clean import CleanConfig, clean_text
+from linz_bde_uploader_spark.operators.clean import clean_text
 from linz_bde_uploader_spark.operators.negotiate import negotiate_columns
 from linz_bde_uploader_spark.plans import discovery
 from linz_bde_uploader_spark.sinks.target import (
@@ -243,9 +245,6 @@ class BdeUploader:
         target_root: str,
         meta: MetaStore,
         tables: list[TableDef],
-        clean_cfg: CleanConfig | None = None,
-        warn_tol_hours: float = 0.5,
-        fail_tol_hours: float = 0.0,
         max_errors: int = 0,
         override_locks: bool = False,
     ):
@@ -254,9 +253,6 @@ class BdeUploader:
         self.target_root = target_root
         self.meta = meta
         self.tables = tables
-        self.clean_cfg = clean_cfg or CleanConfig()
-        self.warn_tol_hours = warn_tol_hours
-        self.fail_tol_hours = fail_tol_hours
         self.max_errors = max_errors
         self.override_locks = override_locks  # -override-locks (C1)
         # Dataset-level commit point: every completed dataset publishes all
@@ -279,12 +275,9 @@ class BdeUploader:
             if p is None:
                 raise FileNotFoundError(f"{ds.name}: missing file {fname} for {d.name}")
             df, hdr = read_crs(self.spark, p, cast=False, max_errors=self.max_errors)
-            if ds.level == "5":
-                status = check_start_date(
-                    hdr.start, prev_details.get(fname.lower()),
-                    self.warn_tol_hours, self.fail_tol_hours,
-                ) if prev_details else "ok"
-                if status == "warning":
+            if ds.level == "5" and prev_details:
+                # default tiers: the reference's warn 0.5 h, fail disabled
+                if check_start_date(hdr.start, prev_details.get(fname.lower())) == "warning":
                     continuity = "warning"
             details += f" {fname} {hdr.end or ''}"
             if d.column_overrides:
@@ -303,7 +296,7 @@ class BdeUploader:
         # before negotiation casts them to the target types.
         for c, dt in out.dtypes:
             if dt == "string":
-                out = out.withColumn(c, clean_text(F.col(c), self.clean_cfg))
+                out = out.withColumn(c, clean_text(F.col(c)))
         schema = header0.schema
         if d.column_overrides:
             schema = T.StructType([
@@ -324,134 +317,133 @@ class BdeUploader:
         state, but I/U/D counters and tolerance gates apply (reference
         ver_apply_table_differences, :1914-1944)."""
         datasets = discovery.list_datasets(self.repo, "0", before)
-
-        def pending(d: TableDef, st, ds: discovery.DatasetRef) -> bool:
-            last = st.last_level0_dataset if st else None
-            return discovery.pending_level0(datasets, last, rebuild, d.files) == [ds]
-
-        def stage(d: TableDef, target: ParquetTarget, df):
-            if full_incremental and d.key_column is not None and target.exists():
-                return *target.stage_full_incremental(
-                    self.spark, df,
-                    row_tol_error=d.row_tol_error, row_tol_warning=d.row_tol_warning,
-                ), True
-            return *target.stage_replace(df), False
-
-        return self._run("0", datasets, pending, lambda ds: stage)
+        return self._run("0", datasets, rebuild=rebuild, full_incremental=full_incremental)
 
     def run_level5(self, before: str | None = None) -> list[LoadReport]:
         datasets = discovery.list_datasets(self.repo, "5", before)
-        chg_def = next((d for d in self.tables if d.is_change_table), None)
-        if chg_def is None:
+        if not any(d.is_change_table for d in self.tables):
             raise ConfigError("level-5 run requires an l5_change_table record")
+        return self._run("5", datasets)
 
-        def pending(d: TableDef, st, ds: discovery.DatasetRef) -> bool:
-            last = st.last_upload_dataset if st else None
-            return bool(discovery.pending_level5([ds], last, d.l5_is_full, d.files))
-
-        def stager(ds: discovery.DatasetRef):
-            # The change table for this dataset (reference
-            # CreateLevel5ChangeTable, lib/LINZ/BdeUpload.pm:874-906).
-            chg_path = ds.file_path(chg_def.files[0]) if chg_def.files else None
-            if chg_path is None:
-                raise FileNotFoundError(
-                    f"{ds.name}: missing change table file "
-                    f"{chg_def.files} (t/linz_bde_uploader.t:1077-1099)"
-                )
-            chg_df, _ = read_crs(self.spark, chg_path, cast=True)
-
-            def stage(d: TableDef, target: ParquetTarget, df):
-                if d.l5_is_full:
-                    # "the level 5 files are actually a full level 0
-                    # update" (conf/tables.conf:40) — full replace, no
-                    # change table involved
-                    return *target.stage_replace(df), True
-                if d.key_column is None:
-                    raise ConfigError(f"{d.name}: level-5 requires key=")
-                # P9/P10: lowercase tablename, project this table's keys
-                keys = (
-                    chg_df.filter(F.lower(F.col("tablename")) == d.name)
-                    .select(F.col("tablekeyvalue").cast("long").alias(d.key_column))
-                    .distinct()
-                )
-                return *target.stage_incremental(
-                    self.spark, df, keys,
-                    row_tol_error=d.row_tol_error, row_tol_warning=d.row_tol_warning,
-                ), True
-
-            return stage
-
-        return self._run("5", datasets, pending, stager)
-
-    def _run(self, level: str, datasets, pending, stager) -> list[LoadReport]:
-        """The upload lifecycle both levels share: one upload row, then
-        each dataset in name order as one transaction, then the upload's
-        final status (``C`` or ``E``).
-
-        ``pending(table, status, dataset)`` says whether a table loads from
-        a dataset; ``stager(dataset)`` returns the level's stage call,
-        ``stage(table, target, df) -> (version, stats, incremental)``."""
-        tables = [
-            d for d in select_tables(self.tables, level=level) if not d.is_change_table
-        ]
+    def _run(
+        self, level: str, datasets, rebuild: bool = False, full_incremental: bool = False
+    ) -> list[LoadReport]:
+        """The upload lifecycle both levels share: one upload row, the
+        run's plan, then each planned dataset in name order as one
+        transaction, then the upload's final status: ``C``, or ``E`` on
+        any exception, ``KeyboardInterrupt`` included."""
         reports: list[LoadReport] = []
         upl_id = self.meta.create_upload(override_locks=self.override_locks)
-        ok = True
+        ok = False
         try:
-            for ds in datasets:
-                stage = stager(ds)
-                # Whole-dataset transaction: every pending table stages its
+            for ds, planned in self._plan(level, datasets, rebuild):
+                # Level 5 reads the day's change table once, and only when
+                # a keyed table needs it.
+                chg = None
+                if level == "5" and not all(d.l5_is_full for d in planned):
+                    chg = self._change_table(ds)
+                # Whole-dataset transaction: every planned table stages its
                 # new version first; ONE manifest flip then publishes them
                 # all, so any failure before it (including a tolerance
                 # abort) leaves every table at its previous state — the
                 # reference's per-dataset txn (BdeDatabase.pm:476-510).
                 txn = DatasetTransaction(self.manifest)
-                loads = []
                 try:
-                    for d in tables:
-                        load = self._stage_table(upl_id, ds, d, pending, stage, txn)
-                        if load is not None:
-                            loads.append(load)
-                except Exception:
+                    loads = [
+                        self._stage_table(upl_id, ds, d, chg, full_incremental, txn)
+                        for d in planned
+                    ]
+                except BaseException:
                     txn.abort()
                     raise
-                if not loads:
-                    continue
                 # Not under the abort above: once the manifest has flipped,
                 # the staged directories are live data.
                 txn.commit()
                 reports += [self._record(upl_id, ds, level, load) for load in loads]
-        except Exception:
-            ok = False
-            raise
+            ok = True
         finally:
             self.meta.finish_upload(upl_id, ok=ok)
         return reports
 
-    def _stage_table(self, upl_id, ds, d: TableDef, pending, stage, txn):
-        """Register, lock, load, negotiate and stage one table of a dataset
-        into ``txn``. Returns what ``_record`` needs, or None when the table
-        has nothing pending in this dataset."""
+    def _plan(self, level: str, datasets, rebuild: bool):
+        """The run's worklist (GetLevel0Updates / GetLevel5Updates,
+        lib/LINZ/BdeUpload.pm:612-707): each selected table's status is
+        read once, a new table registered, and discovery lists the
+        datasets it has pending. Returns ``[(dataset, [table])]`` in
+        dataset name order, config order within a dataset. A level with
+        no dataset reads and registers nothing."""
+        if not datasets:
+            return []
+        work: dict[str, list[TableDef]] = {}
+        for d in select_tables(self.tables, level=level):
+            if d.is_change_table:
+                continue
+            st = self.meta.table_status(d.name)
+            if st is None:
+                self.meta.register_table(
+                    d.name, key_column=d.key_column,
+                    row_tol_error=d.row_tol_error, row_tol_warning=d.row_tol_warning,
+                )
+            if level == "0":
+                last = st.last_level0_dataset if st else None
+                pending = discovery.pending_level0(datasets, last, rebuild, d.files)
+            else:
+                last = st.last_upload_dataset if st else None
+                pending = discovery.pending_level5(datasets, last, d.l5_is_full, d.files)
+            for ds in pending:
+                work.setdefault(ds.name, []).append(d)
+        return [(ds, work[ds.name]) for ds in datasets if ds.name in work]
+
+    def _change_table(self, ds: discovery.DatasetRef):
+        """A level-5 dataset's change table (reference
+        CreateLevel5ChangeTable, lib/LINZ/BdeUpload.pm:874-906)."""
+        chg_def = next(d for d in self.tables if d.is_change_table)
+        chg_path = ds.file_path(chg_def.files[0]) if chg_def.files else None
+        if chg_path is None:
+            raise FileNotFoundError(
+                f"{ds.name}: missing change table file "
+                f"{chg_def.files} (t/linz_bde_uploader.t:1077-1099)"
+            )
+        return read_crs(self.spark, chg_path, cast=True)[0]
+
+    def _stage_table(self, upl_id, ds, d: TableDef, chg, full_incremental: bool, txn):
+        """Lock, load, negotiate and stage one planned table of a dataset
+        into ``txn``. Returns what ``_record`` needs. The status is read
+        again here: a level-5 file's START is checked against the END
+        times of the table's latest level-5 load, which may be an earlier
+        dataset of this run."""
         st = self.meta.table_status(d.name)
-        tbl_id = st.tbl_id if st else self.meta.register_table(
-            d.name, key_column=d.key_column,
-            row_tol_error=d.row_tol_error, row_tol_warning=d.row_tol_warning,
-        )
-        if not pending(d, st, ds):
-            return None
         prev = parse_upload_details(
-            st.last_upload_details if st and st.last_upload_type == "5" else None
+            st.last_upload_details if st.last_upload_type == "5" else None
         )
-        self.meta.acquire_table_lock(tbl_id, upl_id)
+        self.meta.acquire_table_lock(st.tbl_id, upl_id)
         t0 = time.monotonic()
         df, details, cont, file_schema = self._load_files(ds, d, prev)
         target = ParquetTarget(f"{self.target_root}/{d.name}", key=d.key_column)
         # first load: the file header defines the table
         schema = target.read(self.spark).schema if target.exists() else file_schema
-        negotiated = negotiate_columns(df, schema)
-        version, stats, incremental = stage(d, target, negotiated)
+        df = negotiate_columns(df, schema)
+        tol = {"row_tol_error": d.row_tol_error, "row_tol_warning": d.row_tol_warning}
+        incremental = ds.level == "5"
+        if incremental and not d.l5_is_full:
+            if d.key_column is None:
+                raise ConfigError(f"{d.name}: level-5 requires key=")
+            # P9/P10: lowercase tablename, project this table's keys
+            keys = (
+                chg.filter(F.lower(F.col("tablename")) == d.name)
+                .select(F.col("tablekeyvalue").cast("long").alias(d.key_column))
+                .distinct()
+            )
+            version, stats = target.stage_incremental(self.spark, df, keys, **tol)
+        elif full_incremental and d.key_column is not None and target.exists():
+            version, stats = target.stage_full_incremental(self.spark, df, **tol)
+            incremental = True
+        else:
+            # a level-0 replace; "the level 5 files [of an l5_is_full
+            # table] are actually a full level 0 update" (conf/tables.conf:40)
+            version, stats = target.stage_replace(df)
         txn.stage(target, version, stats)
-        return d, tbl_id, stats, incremental, details, cont, time.monotonic() - t0
+        return d, st.tbl_id, stats, incremental, details, cont, time.monotonic() - t0
 
     def _record(self, upl_id, ds, level: str, load) -> LoadReport:
         """Stats row + watermarks (S6) for one committed table load."""

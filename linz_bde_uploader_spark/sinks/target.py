@@ -51,7 +51,6 @@ from linz_bde_uploader_spark.operators.diff import (
     apply_changes,
     classify_incremental_changes,
     full_table_diff,
-    keyswap_repair,
     merge_stats,
     validate_key_column,
 )
@@ -274,36 +273,28 @@ class ParquetTarget:
         spark: SparkSession,
         incoming: DataFrame,
         change_keys: DataFrame,
-        unique_cols: list[str] | None = None,
         row_tol_error: float | None = None,
         row_tol_warning: float | None = None,
     ) -> tuple[str, MergeStats]:
-        """Phase-1 of the level-5 merge (reference :1576-1814): key-swap
-        repair → classify I/U/D/0/X → key gate → apply → conservation and
-        tolerance gates. The merged result is written once and the gates'
-        row counts are observed on that write; a duplicated or NULL key
-        raises before anything is written, and an error-tier violation
-        deletes the staged version and raises — the previous version stays
-        live."""
+        """Phase-1 of the level-5 merge (reference :1576-1814): classify
+        I/U/D/0 → key gate → apply → conservation and tolerance gates. The
+        merged result is written once and the gates' row counts are
+        observed on that write; a duplicated or NULL key raises before
+        anything is written, and an error-tier violation deletes the staged
+        version and raises — the previous version stays live."""
         if self.key is None:
             raise ValueError("incremental apply requires a key column")
         current = self.read(spark)
         validate_key_column(incoming, self.key)  # schema gate, no job
-        if unique_cols:
-            extra = keyswap_repair(current, incoming, change_keys, self.key, unique_cols)
-            change_keys = change_keys.select(self.key).unionByName(extra).distinct()
-        actions = classify_incremental_changes(
-            current, incoming, change_keys, self.key, unique_cols=unique_cols
-        )
+        actions = classify_incremental_changes(current, incoming, change_keys, self.key)
         return self._stage_gated(
             current, actions, incoming, row_tol_error, row_tol_warning
         )
 
     def apply_incremental(self, spark, incoming, change_keys,
-                          unique_cols=None, row_tol_error=None,
-                          row_tol_warning=None) -> MergeStats:
+                          row_tol_error=None, row_tol_warning=None) -> MergeStats:
         v, stats = self.stage_incremental(
-            spark, incoming, change_keys, unique_cols, row_tol_error, row_tol_warning
+            spark, incoming, change_keys, row_tol_error, row_tol_warning
         )
         self._commit(v)
         return stats

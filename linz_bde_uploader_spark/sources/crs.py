@@ -140,11 +140,11 @@ def read_crs_header(path: str, max_header_lines: int = 10000) -> CrsHeader:
 
 def read_crs(
     spark: SparkSession,
-    path: str | list[str],
+    path: str,
     cast: bool = True,
     max_errors: int = 0,
 ) -> tuple[DataFrame, CrsHeader]:
-    """Read a .crs file (or several with identical headers) into a DataFrame.
+    """Read one .crs file into a DataFrame.
 
     Returns ``(df, header)``. Column values are raw header-typed columns;
     empty string becomes NULL (the format's NULL encoding). With
@@ -160,32 +160,16 @@ def read_crs(
     than aborting a 100-TB job (the date-range error class is the cleaner's
     job, not the reader's).
     """
-    paths = [path] if isinstance(path, str) else list(path)
-    header = read_crs_header(paths[0])
+    header = read_crs_header(path)
     if not header.columns:
-        raise ValueError(f"{paths[0]}: header declares no COLUMN records")
+        raise ValueError(f"{path}: header declares no COLUMN records")
 
-    # Per-file header stripping: each file carries its own START/END (etc.)
-    # header lines, so strip the union of every file's header literals —
-    # parsing a header is bounded driver work (never touches the data
-    # section), and a multi-file set with mismatched columns is a hard error
-    # rather than silent misparsing.
-    header_lits = {ln for ln in header.raw_lines if ln}
-    for p in paths[1:]:
-        h = read_crs_header(p)
-        if h.field_names != header.field_names:
-            raise ValueError(
-                f"{p}: column list {h.field_names} differs from "
-                f"{paths[0]}'s {header.field_names}"
-            )
-        header_lits.update(ln for ln in h.raw_lines if ln)
-
-    raw = spark.read.text(paths)
     # Exact JVM-side header removal: every header line literal (and blanks).
     # Data lines always carry a trailing '|' while header lines do not, so
     # the literal filter cannot drop a data row.
-    data = raw.filter(
-        (F.length("value") > 0) & (~F.col("value").isin(sorted(header_lits)))
+    header_lits = sorted({ln for ln in header.raw_lines if ln})
+    data = spark.read.text(path).filter(
+        (F.length("value") > 0) & (~F.col("value").isin(header_lits))
     )
     # column_count validation: a valid row has a trailing '|', so it splits
     # into n_fields + 1 pieces with an empty last piece.
@@ -195,7 +179,7 @@ def read_crs(
         from linz_bde_uploader_spark.operators.clean import ErrorBudgetExceeded
 
         raise ErrorBudgetExceeded(
-            f"{paths}: {n_bad} column_count errors exceeds max_errors={max_errors}"
+            f"{path}: {n_bad} column_count errors exceeds max_errors={max_errors}"
         )
     data = data.filter(n_ok)
     parts = F.split(F.col("value"), r"\|")

@@ -429,8 +429,7 @@ def test_uploader_level5_continuity_warning(spark, tmp_path):
                                  "START 2024-01-01 07:00:00"))
     meta = MetaStore(str(tmp_path / "meta"))
     defs = parse_tables_conf(UPLOADER_CONF)
-    up = BdeUploader(spark, repo, str(tmp_path / "tables"), meta, defs,
-                     warn_tol_hours=0.5)
+    up = BdeUploader(spark, repo, str(tmp_path / "tables"), meta, defs)
     up.run_level0()
     # seed a level-5 watermark with details so the check has a previous END
     st = meta.table_status("crs_parcel_bndry")

@@ -1,7 +1,9 @@
-"""The uploader's one commit path: both levels publish a dataset through one
+"""The uploader's plan and its one commit path: a run plans its pending
+datasets once, and both levels publish a dataset through one
 ``DatasetTransaction`` and one manifest flip, then write stats and
-watermarks. Covers the level-0 all-or-nothing boundary, crashes before and
-after the manifest flip, and ``-override-locks`` through the CLI."""
+watermarks. Covers the level-0 all-or-nothing boundary, crashes and
+interrupts before and after the manifest flip, several level-5 days in one
+run, and ``-override-locks`` through the CLI."""
 
 from __future__ import annotations
 
@@ -21,7 +23,7 @@ from linz_bde_uploader_spark.sinks.target import DatasetManifest, ParquetTarget
 from tests.test_meta_discovery_sinks import UPLOADER_CONF, _write_repo
 
 L0_OLD, L0_NEW = "20240101000000", "20240105000000"
-L5_DAY = "20240102000000"
+L5_DAY, L5_DAY2 = "20240102000000", "20240103000000"
 
 # crs_parcel_copy loads the same files as crs_parcel_bndry under another name
 TWO_TABLE_CONF = UPLOADER_CONF + (
@@ -224,3 +226,101 @@ def test_column_count_mismatch_is_a_config_error(spark, tmp_path):
     assert up.manifest.version_of(t.path) == old
     assert meta.table_status("crs_parcel_bndry").last_upload_dataset == L0_OLD
     assert {r["id"]: r["status"] for r in meta._read("upload")} == {1: "C", 2: "E"}
+
+
+class _Interrupt(BaseException):
+    """Stands in for ``KeyboardInterrupt``: not an ``Exception``."""
+
+
+def test_interrupt_mid_load_aborts_and_ends_upload_e(spark, tmp_path, monkeypatch):
+    """A ``BaseException`` raised while staging the second table of a
+    dataset deletes the first table's staged directory, moves no pointer,
+    and ends the upload ``E``, not ``C``."""
+    repo = _write_two_table_repo(tmp_path)
+    up, meta = _uploader(spark, tmp_path, repo, TWO_TABLE_CONF)
+    up.run_level0()
+    targets = [_target(tmp_path, n) for n in ("crs_parcel_bndry", "crs_parcel_copy")]
+    before = [(t.current_version(), t.versions()) for t in targets]
+    real_stage = ParquetTarget.stage_incremental
+
+    def interrupted(self, *a, **k):
+        if self.path.endswith("crs_parcel_copy"):
+            raise _Interrupt
+        return real_stage(self, *a, **k)
+
+    monkeypatch.setattr(ParquetTarget, "stage_incremental", interrupted)
+    with pytest.raises(_Interrupt):
+        up.run_level5()
+
+    assert [(t.current_version(), t.versions()) for t in targets] == before
+    assert meta._read("upload")[-1]["status"] == "E"
+
+
+def test_level5_two_days_in_one_run(spark, tmp_path):
+    """Two pending level-5 days load in one run. The keyed table applies
+    day 1, then day 2, and day 2's START is checked against the END that
+    day 1 recorded earlier in the same run. The ``l5_is_full`` table is
+    replaced once, from the latest day (reference
+    lib/LINZ/BdeUpload.pm:687)."""
+    repo = _write_repo(tmp_path)
+    day1, day2 = (os.path.join(repo, "level_5", ds) for ds in (L5_DAY, L5_DAY2))
+    os.makedirs(day2)
+    for ds in (os.path.join(repo, "level_0", L0_OLD), day1):
+        shutil.copy(os.path.join(ds, "pab1.crs"), os.path.join(ds, "pab2.crs"))
+
+    def write_day2(name, rows, start=None):
+        with open(os.path.join(day1, name)) as fh:
+            head = fh.read().split("{CRS-DATA}")[0]
+        if start:
+            head = head.replace("START 2024-01-01 06:00:00", f"START {start}")
+        with open(os.path.join(day2, name), "w") as fh:
+            fh.write(head + "{CRS-DATA}\n" + rows)
+
+    # day 2 starts an hour after day 1's END (2024-01-02 06:00:00)
+    write_day2("pab1.crs", "4|2|41|1003|\n7|4|70|1006|\n", start="2024-01-02 07:00:00")
+    write_day2("pab2.crs", "8|1|80|1007|\n9|1|90|1008|\n")
+    write_day2("xaud.crs", "".join(
+        f"{i}|crs_parcel_bndry|{key}|{action}|2024-01-02 12:00:00|\n"
+        for i, (key, action) in enumerate(((4, "U"), (5, "D"), (7, "I")), 1)
+    ))
+    conf = UPLOADER_CONF + "TABLE crs_parcel_full l5_is_full files pab2\n"
+    up, meta = _uploader(spark, tmp_path, repo, conf)
+    up.run_level0()
+
+    reports = up.run_level5()
+
+    assert [(r.table, r.dataset, r.continuity) for r in reports] == [
+        ("crs_parcel_bndry", L5_DAY, "ok"),
+        ("crs_parcel_bndry", L5_DAY2, "warning"),
+        ("crs_parcel_full", L5_DAY2, "ok"),
+    ]
+    assert [(r.ninsert, r.nupdate, r.nnullupdate, r.ndelete) for r in reports] == [
+        (3, 1, 1, 1), (1, 1, 0, 1), (2, 0, 0, 0),
+    ]
+    assert [row[:3] for row in _rows(spark, _target(tmp_path, "crs_parcel_bndry"))] == [
+        (1, 1, 11), (3, 2, 30), (4, 2, 41), (6, 3, 60), (7, 4, 70),
+    ]
+    assert _rows(spark, _target(tmp_path, "crs_parcel_full")) == [
+        (8, 1, 80, 1007), (9, 1, 90, 1008),
+    ]
+    full_id = meta.table_status("crs_parcel_full").tbl_id
+    assert [(s["dataset"], s["ninsert"]) for s in meta._read("upload_stats")
+            if s["tbl_id"] == full_id and s["type"] == "5"] == [(L5_DAY2, 2)]
+
+
+def test_level5_rerun_reads_nothing(spark, tmp_path):
+    """Once a level-5 day is applied, a rerun plans no dataset: it reads no
+    change table and launches no Spark job, even after that day's change
+    file is gone."""
+    up, _ = _uploader(spark, tmp_path, _write_repo(tmp_path), UPLOADER_CONF)
+    up.run_level0()
+    assert len(up.run_level5()) == 1
+    os.remove(os.path.join(up.repo, "level_5", L5_DAY, "xaud.crs"))
+    sc = spark.sparkContext
+    group = f"level5-rerun-{tmp_path.name}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        assert up.run_level5() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
