@@ -26,8 +26,12 @@ cleaner, which is fully specified by its shipped configuration
   1164-1178). The reader counts and enforces it (``sources/crs.py::
   read_crs``); the exception lives here.
 
-Scale posture: the char map compiles to a single JVM ``translate`` plus two
-``regexp_replace`` — whole-stage codegen, zero Python. Only the
+Scale posture: the char map compiles to a single JVM ``translate`` plus
+``regexp_replace`` calls — whole-stage codegen, zero Python. The load path
+does not clean field by field: ``read_crs(clean=True)`` runs
+:func:`clean_line` once over each ``|``-delimited record, one ``translate``
+and one kept-class ``regexp_replace`` per line, as the reference's
+``bde_copy`` cleans the byte stream before ``COPY`` splits it. Only the
 longitude-offset rewrite (arithmetic inside free text) uses the sanctioned
 slow path: an Arrow-batched pandas UDF.
 """
@@ -128,6 +132,21 @@ def clean_text(col: Column | str, cfg: CleanConfig | None = None) -> Column:
     if cfg.unmapped_replacement is not None:
         c = F.regexp_replace(c, cfg.kept_class_regex, cfg.unmapped_replacement)
     return c
+
+
+def clean_line(col: Column | str) -> Column:
+    """:func:`clean_text` over a whole ``|``-delimited ``.crs`` record.
+
+    The map is the default one minus ``|`` (the field separator), LF and CR
+    (the text source ends lines at LF, CR and CRLF, so a record holds
+    neither). The separators survive, and splitting the cleaned line gives,
+    field by field, ``clean_text`` of the raw fields: each mapping acts on
+    one character, none outputs ``|``, and a field never holds ``|``. This
+    is one ``translate`` and one kept-class ``regexp_replace`` per line.
+    """
+    cfg = CleanConfig()
+    cfg.char_map = {k: v for k, v in cfg.char_map.items() if k not in "|\n\r"}
+    return clean_text(col, cfg)
 
 
 def fix_date_range(

@@ -32,7 +32,6 @@ from datetime import datetime
 from pyspark.sql import SparkSession
 
 from linz_bde_uploader_spark.meta.store import MetaStore
-from linz_bde_uploader_spark.operators.clean import clean_text
 from linz_bde_uploader_spark.operators.negotiate import negotiate_columns
 from linz_bde_uploader_spark.plans import discovery
 from linz_bde_uploader_spark.sinks.target import (
@@ -262,10 +261,13 @@ class BdeUploader:
         self.manifest.repair()
 
     def _load_files(self, ds: discovery.DatasetRef, d: TableDef, prev_details: dict[str, str]):
-        """Read+clean+negotiate one table's files in a dataset. Returns
+        """Read and clean one table's files in a dataset. Returns
         (DataFrame, details-string, continuity-status, file schema) — the
         file schema is the first header's types under the ``COLUMN``
-        override names, if any."""
+        override names, if any. Every column is read as a string and goes
+        through the character pass (P4/P5) in the reader, one pass per
+        line (``read_crs(clean=True)``); negotiation then casts to the
+        target types."""
         frames = []
         details = "BdeUpload"
         continuity = "ok"
@@ -274,7 +276,9 @@ class BdeUploader:
             p = ds.file_path(fname)
             if p is None:
                 raise FileNotFoundError(f"{ds.name}: missing file {fname} for {d.name}")
-            df, hdr = read_crs(self.spark, p, cast=False, max_errors=self.max_errors)
+            df, hdr = read_crs(
+                self.spark, p, cast=False, max_errors=self.max_errors, clean=True
+            )
             if ds.level == "5" and prev_details:
                 # default tiers: the reference's warn 0.5 h, fail disabled
                 if check_start_date(hdr.start, prev_details.get(fname.lower())) == "warning":
@@ -292,11 +296,6 @@ class BdeUploader:
         out = frames[0]
         for f2 in frames[1:]:
             out = out.unionByName(f2)
-        # String columns go through the character cleaning pass (P4/P5)
-        # before negotiation casts them to the target types.
-        for c, dt in out.dtypes:
-            if dt == "string":
-                out = out.withColumn(c, clean_text(F.col(c)))
         schema = header0.schema
         if d.column_overrides:
             schema = T.StructType([
@@ -428,11 +427,12 @@ class BdeUploader:
         if incremental and not d.l5_is_full:
             if d.key_column is None:
                 raise ConfigError(f"{d.name}: level-5 requires key=")
-            # P9/P10: lowercase tablename, project this table's keys
+            # P9/P10: lowercase tablename, project this table's keys. A key
+            # the change table repeats needs no distinct: the set only
+            # feeds left-semi joins.
             keys = (
                 chg.filter(F.lower(F.col("tablename")) == d.name)
                 .select(F.col("tablekeyvalue").cast("long").alias(d.key_column))
-                .distinct()
             )
             version, stats = target.stage_incremental(self.spark, df, keys, **tol)
         elif full_incremental and d.key_column is not None and target.exists():

@@ -20,6 +20,12 @@ Python in the row path. Header lines are removed by an exact literal
 ``NOT IN (header lines)`` filter, which Catalyst evaluates JVM-side; data
 lines always carry a trailing ``|`` while header lines do not, so the
 filter is exact.
+
+The character pass (P4/P5, ``operators/clean.py``) can run here, once per
+line, as the reference's ``bde_copy`` cleans the byte stream before
+``COPY ... DELIMITER '|' NULL AS ''`` splits it. The text source ends lines
+at LF, CR and CRLF, so a line holds neither; the line pass leaves ``|``
+alone, so the cleaned line splits into the same positions as the raw one.
 """
 
 from __future__ import annotations
@@ -31,6 +37,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from linz_bde_uploader_spark.operators.clean import ErrorBudgetExceeded, clean_line
 
 #: file-side declared type → Spark type (reference headers use
 #: integer/int/varchar/char/datetime — t/data/*.crs; the loader itself never
@@ -143,6 +151,7 @@ def read_crs(
     path: str,
     cast: bool = True,
     max_errors: int = 0,
+    clean: bool = False,
 ) -> tuple[DataFrame, CrsHeader]:
     """Read one .crs file into a DataFrame.
 
@@ -159,6 +168,13 @@ def read_crs(
     Value-level casts are ``try_cast`` so a single bad cell nulls out rather
     than aborting a 100-TB job (the date-range error class is the cleaner's
     job, not the reader's).
+
+    With ``clean=True`` every field goes through the character pass
+    (P4/P5) before any cast: each line is cleaned once by ``clean_line``
+    and split again, and a field is the cleaned piece at its position —
+    the same value as ``clean_text`` on the raw field. The NULL test stays
+    on the raw field, so a field of only deletable characters reads ``''``,
+    not NULL.
     """
     header = read_crs_header(path)
     if not header.columns:
@@ -168,25 +184,30 @@ def read_crs(
     # Data lines always carry a trailing '|' while header lines do not, so
     # the literal filter cannot drop a data row.
     header_lits = sorted({ln for ln in header.raw_lines if ln})
-    data = spark.read.text(path).filter(
-        (F.length("value") > 0) & (~F.col("value").isin(header_lits))
+    data = (
+        spark.read.text(path)
+        .filter((F.length("value") > 0) & (~F.col("value").isin(header_lits)))
+        .select("value", F.split("value", r"\|").alias("_raw"))
     )
     # column_count validation: a valid row has a trailing '|', so it splits
-    # into n_fields + 1 pieces with an empty last piece.
-    n_ok = F.size(F.split(F.col("value"), r"\|")) == len(header.columns) + 1
+    # into n_fields + 1 pieces with an empty last piece. (Catalyst pushes
+    # this filter below the projection and re-derives the split there.)
+    n_ok = F.size("_raw") == len(header.columns) + 1
     n_bad = data.filter(~n_ok).count()
     if n_bad > max_errors:
-        from linz_bde_uploader_spark.operators.clean import ErrorBudgetExceeded
-
         raise ErrorBudgetExceeded(
             f"{path}: {n_bad} column_count errors exceeds max_errors={max_errors}"
         )
     data = data.filter(n_ok)
-    parts = F.split(F.col("value"), r"\|")
+    if clean:
+        # Its own projection: inlined into each element_at below, Catalyst
+        # would clean the line once per column.
+        data = data.select("_raw", F.split(clean_line("value"), r"\|").alias("_cl"))
     cols = []
     for i, c in enumerate(header.columns):
-        v = F.element_at(parts, i + 1)
-        v = F.when(v == "", None).otherwise(v)  # '' encodes NULL
+        raw = F.element_at("_raw", i + 1)
+        v = F.element_at("_cl", i + 1) if clean else raw
+        v = F.when(raw == "", None).otherwise(v)  # '' encodes NULL
         if cast:
             v = v.try_cast(c.spark_type)
         cols.append(v.alias(c.name))

@@ -59,3 +59,55 @@ def test_changeset_read(spark, crs_dir):
     assert acts[71003] == "D" and acts[71100] == "I" and acts[71001] == "U"
     ts = df.filter("id = 1").collect()[0].timestamp
     assert str(ts) == "2024-03-05 10:30:00"
+
+
+#: one record per character class the cleaner handles; written as bytes so
+#: line 8 can carry invalid UTF-8 (a stray continuation byte mid-field, and
+#: a lead byte whose next byte is the field's '|')
+_DIRTY_LINES = [
+    "1|c0 \x01\x07\x0b\x1f end|c1 \x80\x85\x9f end|",
+    "2|soft\u00adhyphen|nbsp\u00a0here|",
+    "3|«quoted»|back\\slash|",
+    "4|漢字 Ελληνικά|Ōtaki māori|",
+    "5|tab\there|bar¦ acute´ dot·|",
+    "6||\u00ad\x01\x85|",
+    "7|–—‘’“”•|emoji \U0001f600 end|",
+]
+
+
+def _dirty_crs(path):
+    head = (
+        "HEDR\t 2.0.0\nTABLE\tdirty\n"
+        "COLUMN\t id   integer NULL\n"
+        "COLUMN\t a    varchar NULL\n"
+        "COLUMN\t b    varchar NULL\n"
+        "{CRS-DATA}\n"
+    )
+    body = "".join(ln + "\n" for ln in _DIRTY_LINES).encode("utf-8")
+    body += b"8|bad\x80byte|tail\xc3|\n"
+    path.write_bytes(head.encode("utf-8") + body)
+    return str(path)
+
+
+def test_clean_in_reader_equals_clean_per_field(spark, tmp_path):
+    """One character pass per line gives exactly what ``clean_text`` gives
+    on each raw field: the same values, the same NULLs."""
+    from linz_bde_uploader_spark.operators.clean import clean_text
+
+    p = _dirty_crs(tmp_path / "dirty.crs")
+    per_field, _ = read_crs(spark, p, cast=False)
+    per_field = per_field.select([clean_text(c).alias(c) for c in per_field.columns])
+    per_line, _ = read_crs(spark, p, cast=False, clean=True)
+    assert per_line.columns == per_field.columns == ["id", "a", "b"]
+    got = sorted(tuple(r) for r in per_line.collect())
+    assert got == sorted(tuple(r) for r in per_field.collect())
+    rows = {r[0]: r[1:] for r in got}
+    assert len(rows) == 8
+    assert rows["1"] == ("c0  end", "c1  end")
+    assert rows["2"] == ("softhyphen", "nbsp here")
+    assert rows["3"] == ('"quoted"', "back slash")
+    assert rows["4"] == ("?? ????????", "Ōtaki māori")
+    assert rows["5"] == ("tab\there", "bar  acute' dot.")
+    assert rows["6"] == (None, "")  # empty is NULL; all-deleted is ''
+    assert rows["7"] == ("–—‘’“”•", "emoji ? end")
+    assert rows["8"] == ("badbyte", "tail")

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -190,3 +191,39 @@ def test_salted_join_shuffles_on_salted_key(spark):
     join_line = next(ln for ln in plan.splitlines() if "SortMergeJoin" in ln)
     assert "_salt" in join_line  # (key, salt) composite join key
     assert "_salt" in plan.split("Exchange hashpartitioning")[1][:120]
+
+
+def test_crs_clean_runs_once_per_line(spark, crs_dir):
+    """``read_crs(clean=True)`` cleans each line once: the optimized plan
+    holds one ``translate`` for all five columns (a projection collapsed
+    into the per-column ``element_at``s would hold five), and the scan
+    stays inside WholeStageCodegen."""
+    from linz_bde_uploader_spark.sources.crs import read_crs
+
+    df, _ = read_crs(spark, str(crs_dir / "bnd1.crs"), cast=False, clean=True)
+    assert len(df.columns) == 5
+    assert df._jdf.queryExecution().optimizedPlan().toString().count("translate(") == 1
+    plan = _plan(df)
+    assert plan.count("translate(") == 1
+    ops = [ln.strip().lstrip("+- ") for ln in plan.splitlines()]
+    assert [op for op in ops if op.startswith(("Project", "Filter"))] == []
+    assert "*(1) Project" in plan and "*(1) Filter" in plan
+
+
+def test_crs_bare_cr_ends_a_line(spark, tmp_path):
+    """The text source ends lines at a bare CR too, so a CR inside a data
+    line splits it in two, and both halves fail the field count. This is
+    why the per-line character pass has no CR (or LF) to map."""
+    from linz_bde_uploader_spark.operators.clean import ErrorBudgetExceeded
+    from linz_bde_uploader_spark.sources.crs import read_crs
+
+    p = tmp_path / "cr.crs"
+    p.write_bytes(
+        b"TABLE\tt\nCOLUMN\t id integer NULL\nCOLUMN\t des varchar NULL\n"
+        b"COLUMN\t n integer NULL\n{CRS-DATA}\n"
+        b"1|one|1|\n2|tw\ro|2|\r\n3|three|3|\n"
+    )
+    with pytest.raises(ErrorBudgetExceeded, match="2 column_count errors"):
+        read_crs(spark, str(p), max_errors=1, clean=True)
+    df, _ = read_crs(spark, str(p), max_errors=2, clean=True)
+    assert sorted((r.id, r.des) for r in df.collect()) == [(1, "one"), (3, "three")]
