@@ -234,23 +234,25 @@ def _actions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DF_.apply_changes(
-        W.orders_current(spark, sf_dir),
-        W.orders_incoming(spark, sf_dir),
-        _actions(spark, sf_dir),
-        "o_orderkey",
+        W.orders_current(spark, sf_dir), _actions(spark, sf_dir), "o_orderkey"
     )
 
 
+def _classified(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(key, _action)`` of the action set, without the incoming row."""
+    return _actions(spark, sf_dir).select("o_orderkey", "_action")
+
+
 def q_j1_inc_deletes(spark, sf_dir):
-    return _actions(spark, sf_dir).filter(F.col("_action") == "D")
+    return _classified(spark, sf_dir).filter(F.col("_action") == "D")
 
 
 def q_j2_inc_inserts(spark, sf_dir):
-    return _actions(spark, sf_dir).filter(F.col("_action") == "I")
+    return _classified(spark, sf_dir).filter(F.col("_action") == "I")
 
 
 def q_j3_classify(spark, sf_dir):
-    return _actions(spark, sf_dir)
+    return _classified(spark, sf_dir)
 
 
 def q_j4_keyswap_repair(spark, sf_dir):
@@ -271,7 +273,7 @@ def q_j5_apply_changes(spark, sf_dir):
 def q_j6_full_diff(spark, sf_dir):
     return DF_.full_table_diff(
         W.orders_current(spark, sf_dir), W.orders_incoming(spark, sf_dir), "o_orderkey"
-    )
+    ).select("o_orderkey", "_action")
 
 
 def q_merge_stats(spark, sf_dir):

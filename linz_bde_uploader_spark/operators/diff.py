@@ -10,6 +10,8 @@ the external ``table_version`` apply/diff kernel it calls at :1762-1765 and
   declared I/U/D in a change table is advisory only (reference :2228-2368).
 
   =====  =============================================================
+  ``K``  key held more than once on either side — not a valid merge
+         key; tested first, and ``merge_stats`` rejects it (:2839-2877)
   ``D``  key exists in current, absent from incoming      (:2228-2259)
   ``I``  key in incoming, absent from current             (:2264-2295)
   ``0``  present in both, all columns null-safe equal — a "null update"
@@ -27,33 +29,44 @@ the external ``table_version`` apply/diff kernel it calls at :1762-1765 and
   ``ver_apply_table_differences``, for ``-full-incremental`` loads where no
   change table exists) compares every row and drops the ``0`` rows.
 
+  Each side counts its rows per key (``count(*) over (partition by key)``)
+  before the join, which is what ``K`` tests. The window's hash exchange
+  and sort on the key are the ones the sort-merge join needs, so it adds
+  no Exchange. It does keep AQE's skew-join split from acting on the join,
+  whose children are then windows, not shuffle stages; a valid key is
+  unique, so hashing it cannot skew.
+
+  Beside ``(key, _action)``, the output carries every non-key column of
+  the incoming row (NULL on ``D`` rows): the action set is the working
+  copy of the changed rows, and the apply reads its fresh rows from it.
+
 - **Key-swap repair** (J4, reference :2146-2223): when a row's primary key
   changed but an alternate unique column still matches an existing row, the
   *old* key must be pulled into the change set (else the insert of the new
   key collides with the live old row).
 
 - **Apply** (J5): keys classified D/U/X are deleted, rows classified
-  I/U/X are inserted from incoming — a keyed MERGE. Expressed as
+  I/U/X are inserted from the action set — a keyed MERGE. Expressed as
   ``left_anti`` + ``union`` so it runs on any sink (parquet/Delta/JDBC);
   for a Delta sink the same action set folds 1:1 into ``MERGE INTO``.
 
 - **Counters and key gate**: ``merge_stats`` counts the actions in one
-  aggregate and, in the same pass, rejects a key that carries more than
-  one action row or is NULL.
+  aggregate and, in the same pass, rejects ``K`` rows and NULL keys.
 
 Scale posture (100 TB): every operator is a pure DataFrame expression. The
-compare is one sort-merge full-outer join under AQE (skew-split), with the
+compare is one sort-merge full-outer join under AQE, with the
 level-5 change keys semi-joined into both sides first (broadcast by AQE
 when the key set is small); the null-safe all-columns compare stays in
 whole-stage codegen (``<=>`` chains), no Python in the row path. The
-classification output ``(key, action)`` is narrow (two columns, O(changed
-keys) rows). The staged write (``ParquetTarget._stage_gated``) persists it
-once, at a storage level that spills to disk, so ``merge_stats``' aggregate
-and ``apply_changes`` read the same materialised rows and the compare runs
-once per table load; the set is released on every exit, gate failures
-included. The wide rows are shuffled at most once more, in the apply joins,
-and not at all when AQE broadcasts the persisted set, whose size it then
-knows.
+classification output is O(changed rows) at the incoming row's full width
+(a level-5 set keeps its ``0`` rows; ``full_table_diff`` drops them). The
+staged write (``ParquetTarget._stage_gated``) persists it once, at a
+storage level that spills to disk, so ``merge_stats``' aggregate and
+``apply_changes`` read the same materialised rows: the compare runs once
+per table load, and the write does not read the incoming rows again. The
+set is released on every exit, gate failures included. The current rows
+are shuffled at most once more, in the apply's anti join, and not at all
+when AQE broadcasts the persisted set, whose size it then knows.
 """
 
 from __future__ import annotations
@@ -61,7 +74,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 ACTION_COL = "_action"
@@ -71,6 +84,10 @@ ACT_UPDATE = "U"
 ACT_DELETE = "D"
 ACT_NULL_UPDATE = "0"
 ACT_KEY_SWAP = "X"
+ACT_KEY_REPEATED = "K"
+
+#: rows per key on one side of the compare (``K`` when above 1)
+_KEY_ROWS = "_key_rows"
 
 
 @dataclass
@@ -142,17 +159,22 @@ def _classify(
     key: str,
     unique_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Full-outer compare by key → ``(key, _action)`` with I/D/0/X/U, one
-    row per joined pair (a key held twice on a side yields two rows, which
-    ``merge_stats`` rejects)."""
+    """Full-outer compare by key → ``(key, _action, <incoming's non-key
+    columns>)`` with K/I/D/0/X/U, one row per joined pair (every row of a
+    key held twice on a side classifies ``K``)."""
     compare_cols = [c for c in current.columns if c != key]
     unique_cols = [c for c in (unique_cols or []) if c != key]
+    per_key = Window.partitionBy(key)
 
-    cur = current.alias("cur")
-    inc = incoming.alias("inc")
+    cur = current.withColumn(_KEY_ROWS, F.count(F.lit(1)).over(per_key)).alias("cur")
+    inc = incoming.withColumn(_KEY_ROWS, F.count(F.lit(1)).over(per_key)).alias("inc")
     joined = cur.join(inc, F.col(f"cur.{key}") == F.col(f"inc.{key}"), "full_outer")
     action = (
-        F.when(F.col(f"cur.{key}").isNull(), F.lit(ACT_INSERT))
+        F.when(
+            (F.col(f"cur.{_KEY_ROWS}") > 1) | (F.col(f"inc.{_KEY_ROWS}") > 1),
+            F.lit(ACT_KEY_REPEATED),
+        )
+        .when(F.col(f"cur.{key}").isNull(), F.lit(ACT_INSERT))
         .when(F.col(f"inc.{key}").isNull(), F.lit(ACT_DELETE))
         .when(_all_equal_nullsafe("cur", "inc", compare_cols), F.lit(ACT_NULL_UPDATE))
     )
@@ -162,6 +184,7 @@ def _classify(
     return joined.select(
         F.coalesce(F.col(f"cur.{key}"), F.col(f"inc.{key}")).alias(key),
         action.alias(ACTION_COL),
+        *[F.col(f"inc.{c}").alias(c) for c in incoming.columns if c != key],
     )
 
 
@@ -172,7 +195,8 @@ def classify_incremental_changes(
     key: str,
     unique_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Classify each changed key into I/U/D/0/X → DataFrame ``(key, _action)``.
+    """Classify each changed key into K/I/U/D/0/X → DataFrame ``(key,
+    _action, <incoming's non-key columns>)``.
 
     ``change_keys`` is a one-column (``key``) DataFrame of keys named in the
     change table for this target (already filtered by tablename — reference
@@ -235,11 +259,11 @@ def keyswap_repair(
 
 def merge_stats(actions: DataFrame) -> MergeStats:
     """Count per-action rows, and gate the key, in one aggregate (map-side
-    partial agg plus a distinct count of the key).
+    partial agg, no shuffle on the key).
 
-    Raises ``KeyValidityError`` when a key carries more than one action row
-    (it occurs twice in the current or incoming rows the merge touches) or
-    is NULL — before anything is written."""
+    Raises ``KeyValidityError`` when a key is NULL or classified ``K`` (it
+    occurs twice in the current or incoming rows the merge touches) —
+    before anything is written."""
     key = next(c for c in actions.columns if c != ACTION_COL)
     row = actions.agg(
         F.count(F.when(F.col(ACTION_COL) == ACT_INSERT, 1)).alias("ni"),
@@ -248,26 +272,25 @@ def merge_stats(actions: DataFrame) -> MergeStats:
         ).alias("nu"),
         F.count(F.when(F.col(ACTION_COL) == ACT_NULL_UPDATE, 1)).alias("n0"),
         F.count(F.when(F.col(ACTION_COL) == ACT_DELETE, 1)).alias("nd"),
+        F.count(F.when(F.col(ACTION_COL) == ACT_KEY_REPEATED, 1)).alias("nk"),
         F.count(F.lit(1)).alias("n"),
         F.count(key).alias("n_key"),
-        F.countDistinct(key).alias("n_distinct"),
     ).collect()[0]
     if row.n_key < row.n:
         raise KeyValidityError(
             f"key column {key!r} is not unique: {row.n - row.n_key} "
             f"action rows have a NULL key"
         )
-    if row.n_distinct < row.n:
+    if row.nk:
         raise KeyValidityError(
-            f"key column {key!r} is not unique: {row.n} action rows "
-            f"for {row.n_distinct} distinct keys"
+            f"key column {key!r} is not unique: {row.nk} action rows "
+            f"pair a key held more than once"
         )
     return MergeStats(ninsert=row.ni, nupdate=row.nu, nnullupdate=row.n0, ndelete=row.nd)
 
 
 def apply_changes(
     current: DataFrame,
-    incoming: DataFrame,
     actions: DataFrame,
     key: str,
 ) -> DataFrame:
@@ -275,7 +298,8 @@ def apply_changes(
     ``table_version._ver_apply_changes`` called at :1762-1765).
 
     - keys with action D/U/X are removed from current
-    - incoming rows with action I/U/X are appended
+    - the action set's I/U/X rows, which carry the incoming row, are
+      appended
     - action '0' (null update) touches nothing
 
     X's delete-then-insert ordering is inherent here: the merged result is
@@ -284,16 +308,15 @@ def apply_changes(
     doomed = actions.filter(
         F.col(ACTION_COL).isin(ACT_DELETE, ACT_UPDATE, ACT_KEY_SWAP)
     ).select(key)
-    fresh_keys = actions.filter(
+    fresh = actions.filter(
         F.col(ACTION_COL).isin(ACT_INSERT, ACT_UPDATE, ACT_KEY_SWAP)
-    ).select(key)
+    ).select(current.columns)
 
-    # No broadcast hints: the action set scales with the change volume (a
+    # No broadcast hint: the action set scales with the change volume (a
     # full_table_diff can touch most keys), so a forced broadcast is an OOM
-    # at 100 TB. AQE broadcasts small action sets on its own.
+    # at 100 TB. AQE broadcasts a small action set on its own.
     kept = current.join(doomed, key, "left_anti")
-    fresh = incoming.join(fresh_keys, key, "left_semi")
-    return kept.unionByName(fresh.select(current.columns))
+    return kept.unionByName(fresh)
 
 
 def full_table_diff(
@@ -301,13 +324,13 @@ def full_table_diff(
     incoming: DataFrame,
     key: str,
 ) -> DataFrame:
-    """Full-outer compare by key → ``(key, _action)`` with I/U/D only
-    (unchanged rows excluded) — ``ver_apply_table_differences`` semantics
+    """Full-outer compare by key → ``(key, _action, <incoming's non-key
+    columns>)`` with K/I/U/D only (unchanged rows excluded) — ``ver_apply_table_differences`` semantics
     (reference call site :1914-1928) for ``-full-incremental`` loads.
 
-    One shuffle each side on ``key`` (sort-merge under AQE); the action
-    output is narrow. At 100 TB this is the optimal shape — the compare
-    must see every row once, and nothing is re-shuffled afterwards.
+    One shuffle each side on ``key`` (sort-merge under AQE). At 100 TB
+    this is the optimal shape — the compare must see every row once, and
+    nothing is re-shuffled afterwards.
     """
     return _classify(current, incoming, key).filter(
         F.col(ACTION_COL) != ACT_NULL_UPDATE

@@ -4,6 +4,20 @@ Local-mode testing uses ``local[N]``; the same settings are what we would
 ship as ``spark-defaults`` for a 1000-executor cluster run: AQE on (runtime
 join-strategy + skew handling), Arrow on (Pandas-UDF slow path), shuffle
 partitions sized to the cluster rather than the 200 default.
+
+Two settings trade something away:
+
+- ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` lets AQE
+  coalesce the shuffle partitions of a persisted frame, as it does for an
+  unpersisted one. The staged write reads the persisted action set, and
+  without it each of the set's shuffle partitions becomes a write task and
+  a part file. The cost, as Spark documents the flag: a query over
+  cached data may need an extra shuffle to read it.
+- ``spark.python.sql.dataFrameDebugging.enabled=false`` stops PySpark from
+  capturing the Python call site of every ``Column`` and ``DataFrame``
+  call (several Py4J round trips each). The cost: an analysis or runtime
+  error no longer carries the "DataFrame query context" lines that name
+  the Python line which built the failing expression.
 """
 
 from __future__ import annotations
@@ -66,6 +80,8 @@ def get_spark(app_name: str = "linz_bde_uploader_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", _driver_memory())
         # GC note: default G1. ZGC was measured here and REJECTED — its

@@ -11,9 +11,14 @@ transaction, with the row-tolerance gate aborting before commit
 
 Spark-first mapping:
 
-- **Staging (S4)** — no separate working copy: the cleaned, negotiated
-  DataFrame feeds the merge directly, and each apply writes its result as
-  an uncommitted version directory (below). There is no index to defer
+- **Staging (S4)** — the working copy is the persisted action set: the
+  cleaned, negotiated DataFrame feeds the compare, whose output carries
+  each changed key's incoming row. ``_stage_gated`` persists it once, the
+  key gate counts it, and the merge reads its fresh rows from it, so the
+  incoming file is read once per table load (the reference copies the file
+  once and applies the merge from that copy). A level-0 replace writes the
+  snapshot straight through. Each apply writes its result as an
+  uncommitted version directory (below). There is no index to defer
   because Spark joins don't use indexes (the reference's index-less COPY
   trick is free here).
 - **Target (S5)** — ``ParquetTarget``: a directory-backed table with
@@ -41,11 +46,13 @@ import shutil
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from linz_bde_uploader_spark.operators.diff import (
+    ACTION_COL,
     KeyValidityError,
     MergeStats,
     apply_changes,
@@ -55,29 +62,32 @@ from linz_bde_uploader_spark.operators.diff import (
     validate_key_column,
 )
 from linz_bde_uploader_spark.operators.tolerance import check_row_tolerance
+from linz_bde_uploader_spark.observed import counted, rows_seen
 
 CURRENT_MARKER = "_CURRENT"
-
-
-def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """``df`` with a row count observed on whichever action runs it."""
-    seen = Observation()
-    return df.observe(seen, F.count(F.lit(1)).alias("n")), seen
-
-
-def _rows_seen(seen: Observation) -> int:
-    """The observed row count. AQE drops a query stage that came out empty
-    from the final plan, and the stage's observed metrics with it: an
-    observation without metrics saw no rows."""
-    return seen.get["n"] if seen._jo.getRow().length() else 0
+#: the footer key under which Spark stores the schema of the rows it wrote
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _written_rows(df: DataFrame, path: str) -> int:
     """Write ``df`` as parquet to ``path``; return the rows written,
     observed on the write itself (no second pass)."""
-    df, seen = _counted(df)
+    df, seen = counted(df)
     df.write.mode("overwrite").parquet(path)
-    return _rows_seen(seen)
+    return rows_seen(seen)
+
+
+def _read_written(spark: SparkSession, d: str) -> DataFrame:
+    """Read a directory this sink wrote. The schema comes from the footer
+    of one part file (read on the driver, no job) instead of
+    ``spark.read.parquet``'s schema-inference job; a directory without a
+    Spark-written part file is inferred as before."""
+    part = next((f for f in sorted(os.listdir(d)) if f.endswith(".parquet")), None)
+    meta = pq.read_metadata(os.path.join(d, part)).metadata if part else None
+    if not meta or _SPARK_SCHEMA_KEY not in meta:
+        return spark.read.parquet(d)
+    schema = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(d)
 
 
 class ParquetTarget:
@@ -145,13 +155,13 @@ class ParquetTarget:
     # -- reads --------------------------------------------------------------
 
     def read(self, spark: SparkSession) -> DataFrame:
-        """The current version. Version directories are immutable, so the
-        frame is memoized per directory: each ``spark.read.parquet`` runs a
-        schema-inference job, and one table load reads the current version
-        for negotiation and again for its merge."""
+        """The current version, read with the schema its footer stores (no
+        job). Version directories are immutable, so the frame is memoized
+        per directory: one table load reads the current version for
+        negotiation and again for its merge."""
         d = self._data_dir()
         if self._read_memo is None or self._read_memo[0] != d:
-            self._read_memo = (d, spark.read.parquet(d))
+            self._read_memo = (d, _read_written(spark, d))
         return self._read_memo[1]
 
     def versions(self) -> list[str]:
@@ -167,7 +177,7 @@ class ParquetTarget:
     def read_version(self, spark: SparkSession, version: str) -> DataFrame:
         """Time travel: read a specific committed version (immutable
         directories make every version a consistent snapshot)."""
-        return spark.read.parquet(os.path.join(self.path, version))
+        return _read_written(spark, os.path.join(self.path, version))
 
     def changes_between(
         self,
@@ -194,7 +204,7 @@ class ParquetTarget:
             if to_version is None
             else self.read_version(spark, to_version)
         )
-        return full_table_diff(old, new, self.key)
+        return full_table_diff(old, new, self.key).select(self.key, ACTION_COL)
 
     # -- applies (S5): two-phase stage -> commit ----------------------------
     #
@@ -221,16 +231,17 @@ class ParquetTarget:
         self,
         current: DataFrame,
         actions: DataFrame,
-        incoming: DataFrame,
         row_tol_error: float | None,
         row_tol_warning: float | None,
     ) -> tuple[str, MergeStats]:
         """Count and key-gate the actions (``merge_stats`` raises on a
         duplicated or NULL key before any version directory exists), then
         write the merge once. The action set is classified once: it is
-        persisted (memory, spilling to disk; two columns, one row per
-        changed key) before ``merge_stats`` reads it, the write reads the
-        same rows, and it is released once the write ends or the key gate
+        persisted (memory, spilling to disk; one row per changed key, at
+        the incoming row's full width) before ``merge_stats`` reads it. The
+        write reads only ``current`` and the persisted rows, whose I/U/X
+        rows are the merge's fresh rows, so the incoming file is not read
+        again. The set is released once the write ends or the key gate
         raises, before the other gates run. The write carries both gate
         counts: ``old_n`` is observed on ``current`` as the merge reads it,
         ``new_n`` on the merged rows as they are written. A failed
@@ -239,20 +250,17 @@ class ParquetTarget:
         actions = actions.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             stats = merge_stats(actions)
-            current, seen = _counted(current)
-            merged = apply_changes(current, incoming, actions, self.key)
+            current, seen = counted(current)
+            merged = apply_changes(current, actions, self.key)
             v, d = self._new_version()
             new_n = _written_rows(merged, d)
         finally:
             actions.unpersist()
-        old_n = _rows_seen(seen)
+        old_n = rows_seen(seen)
         try:
             # Conservation: a keyed merge adds one row per insert and drops
-            # one per delete. One action row per key (merge_stats' gate)
-            # implies it, with one exception the gate cannot see: a key held
-            # twice in current whose copy equal to the incoming row
-            # classified '0' and was dropped by full_table_diff. Any other
-            # miss means the write lost or added rows.
+            # one per delete. merge_stats' gate (no NULL and no K key)
+            # implies it; a miss means the write lost or added rows.
             expected = old_n + stats.ninsert - stats.ndelete
             if new_n != expected:
                 raise KeyValidityError(
@@ -287,9 +295,7 @@ class ParquetTarget:
         current = self.read(spark)
         validate_key_column(incoming, self.key)  # schema gate, no job
         actions = classify_incremental_changes(current, incoming, change_keys, self.key)
-        return self._stage_gated(
-            current, actions, incoming, row_tol_error, row_tol_warning
-        )
+        return self._stage_gated(current, actions, row_tol_error, row_tol_warning)
 
     def apply_incremental(self, spark, incoming, change_keys,
                           row_tol_error=None, row_tol_warning=None) -> MergeStats:
@@ -313,9 +319,7 @@ class ParquetTarget:
         current = self.read(spark)
         validate_key_column(incoming, self.key)  # schema gate, no job
         actions = full_table_diff(current, incoming, self.key)
-        return self._stage_gated(
-            current, actions, incoming, row_tol_error, row_tol_warning
-        )
+        return self._stage_gated(current, actions, row_tol_error, row_tol_warning)
 
 
 class DatasetManifest:
@@ -376,7 +380,7 @@ class DatasetManifest:
         v = self.version_of(table_path)
         if v is None:
             return ParquetTarget(table_path).read(spark)
-        return spark.read.parquet(os.path.join(table_path, v))
+        return _read_written(spark, os.path.join(table_path, v))
 
     def repair(self) -> int:
         """Converge per-table pointers to the current manifest (idempotent;

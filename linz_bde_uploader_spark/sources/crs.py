@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from linz_bde_uploader_spark.observed import observed, rows_seen
 from linz_bde_uploader_spark.operators.clean import ErrorBudgetExceeded, clean_line
 
 #: file-side declared type → Spark type (reference headers use
@@ -161,8 +162,9 @@ def read_crs(
     typing to the target table — schema negotiation does the same here).
 
     Rows whose field count doesn't match the header (``column_count`` error
-    class, P8) are excluded from the result; they are counted eagerly and
-    ``ErrorBudgetExceeded`` is raised when the count exceeds ``max_errors``
+    class, P8) are excluded from the result; they are counted eagerly, in
+    one job that scans the file to Spark's ``noop`` sink and observes the
+    count, and ``ErrorBudgetExceeded`` is raised when it exceeds ``max_errors``
     (reference: bde_copy error budget, conf/linz_bde_uploader.conf:359-376
     and max_file_errors handling at lib/LINZ/BdeUpload.pm:1164-1178).
     Value-level casts are ``try_cast`` so a single bad cell nulls out rather
@@ -193,7 +195,11 @@ def read_crs(
     # into n_fields + 1 pieces with an empty last piece. (Catalyst pushes
     # this filter below the projection and re-derives the split there.)
     n_ok = F.size("_raw") == len(header.columns) + 1
-    n_bad = data.filter(~n_ok).count()
+    # An observation on a scan, not filter().count(): under AQE the count
+    # runs a shuffle-map job and then the final aggregate.
+    scan, seen = observed(data, F.count_if(~n_ok))
+    scan.write.format("noop").mode("overwrite").save()
+    n_bad = rows_seen(seen)
     if n_bad > max_errors:
         raise ErrorBudgetExceeded(
             f"{path}: {n_bad} column_count errors exceeds max_errors={max_errors}"

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -80,6 +81,24 @@ def spark():
 
     s = get_spark("tests", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture
+def jobs_launched(spark):
+    """``jobs_launched(fn)`` runs ``fn()`` under a job group of its own and
+    returns ``(fn's result, the Spark jobs it launched)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-launched-{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

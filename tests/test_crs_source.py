@@ -111,3 +111,26 @@ def test_clean_in_reader_equals_clean_per_field(spark, tmp_path):
     assert rows["6"] == (None, "")  # empty is NULL; all-deleted is ''
     assert rows["7"] == ("–—‘’“”•", "emoji ? end")
     assert rows["8"] == ("badbyte", "tail")
+
+
+def test_bad_row_check_is_one_job(spark, crs_dir, tmp_path, jobs_launched):
+    """The column_count check observes its count on one scan of the file:
+    one job per ``read_crs``, with the exact count in the budget error. An
+    empty data section reads 0 bad rows."""
+    import pytest
+
+    from linz_bde_uploader_spark.operators.clean import ErrorBudgetExceeded
+
+    src = (crs_dir / "bnd1.crs").read_text(encoding="utf-8")
+    bad = tmp_path / "bad.crs"
+    bad.write_text(src + "9004|4|\n9005|5|505|N|71005|x|\n", encoding="utf-8")
+    (df, _), jobs = jobs_launched(lambda: read_crs(spark, str(bad), max_errors=2))
+    assert jobs == 1
+    assert df.count() == 3
+    with pytest.raises(ErrorBudgetExceeded, match="2 column_count errors exceeds max_errors=1"):
+        read_crs(spark, str(bad), max_errors=1)
+
+    empty = tmp_path / "empty.crs"
+    empty.write_text(src[: src.index("{CRS-DATA}")] + "{CRS-DATA}\n", encoding="utf-8")
+    (df, _), jobs = jobs_launched(lambda: read_crs(spark, str(empty)))
+    assert jobs == 1 and df.count() == 0

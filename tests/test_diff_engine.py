@@ -64,7 +64,7 @@ def test_merge_stats_and_apply(spark, scenario):
     stats = merge_stats(actions)
     assert (stats.ninsert, stats.nupdate, stats.nnullupdate, stats.ndelete) == (2, 1, 1, 1)
 
-    merged = apply_changes(current, incoming, actions, "audit_id")
+    merged = apply_changes(current, actions, "audit_id")
     rows = {r.audit_id: r for r in merged.collect()}
     assert set(rows) == {71001, 71002, 71100, 71101}
     assert rows[71001].seq == 10            # updated
@@ -93,7 +93,7 @@ def test_keyswap_classification(spark):
     acts = {r.audit_id: r[ACTION_COL] for r in actions.collect()}
     assert acts == {71005: "D", 71055: "I"}
 
-    merged = apply_changes(current, incoming, actions, "audit_id")
+    merged = apply_changes(current, actions, "audit_id")
     keys = {r.audit_id for r in merged.collect()}
     assert keys == {71055, 71006}
 
@@ -110,7 +110,7 @@ def test_unique_col_differs_is_X(spark):
     assert acts == {71005: "X"}
     stats = merge_stats(actions)
     assert stats.nupdate == 1  # X counts as an update in upload_stats
-    merged = apply_changes(current, incoming, actions, "audit_id")
+    merged = apply_changes(current, actions, "audit_id")
     assert merged.collect()[0].line_id == 9505
 
 
@@ -134,7 +134,7 @@ def test_full_table_diff(spark, scenario):
     acts = {r.audit_id: r[ACTION_COL] for r in diff.collect()}
     # 71002 unchanged → excluded entirely
     assert acts == {71003: "D", 71001: "U", 71100: "I", 71101: "I"}
-    merged = apply_changes(current, incoming, diff, "audit_id")
+    merged = apply_changes(current, diff, "audit_id")
     assert merged.count() == 4
 
 
@@ -160,7 +160,7 @@ def test_declared_actions_are_advisory(spark, scenario):
     change_keys = spark.createDataFrame([(71001,)], ["audit_id"])
     actions = classify_incremental_changes(current, current, change_keys, "audit_id")
     assert actions.collect()[0][ACTION_COL] == "0"
-    merged = apply_changes(current, current, actions, "audit_id")
+    merged = apply_changes(current, actions, "audit_id")
     assert merged.count() == current.count()
 
 
@@ -243,6 +243,80 @@ def test_key_validity_gate(spark, tmp_path):
         assert _persisted(spark) == cached
 
 
+def test_key_held_twice_classifies_K(spark):
+    """A key held more than once on either side classifies ``K`` on every
+    row it pairs, before I and D, and ``merge_stats`` rejects it."""
+    from linz_bde_uploader_spark.operators.diff import KeyValidityError
+
+    schema = "id long, v string"
+    current = spark.createDataFrame([(1, "a"), (1, "z"), (2, "b"), (4, "d")], schema)
+    incoming = spark.createDataFrame([(2, "b"), (3, "p"), (3, "q"), (4, "e")], schema)
+    acts = sorted(
+        (r.id, r[ACTION_COL]) for r in full_table_diff(current, incoming, "id").collect()
+    )
+    assert acts == [(1, "K"), (1, "K"), (3, "K"), (3, "K"), (4, "U")]
+    with pytest.raises(KeyValidityError, match="'id' is not unique: 4 action rows"):
+        merge_stats(full_table_diff(current, incoming, "id"))
+
+
+def _hash_exchanges(df) -> int:
+    """Hash-partitioning exchanges in ``df``'s physical plan, not counting
+    a persisted frame's own plan (an ``InMemoryTableScan`` is a leaf)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return sum(
+        n.nodeName() == "Exchange"
+        and n.outputPartitioning().getClass().getSimpleName() == "HashPartitioning"
+        for n in _plan_nodes(plan)
+    )
+
+
+def test_key_gate_adds_no_exchange(spark, scenario, monkeypatch):
+    """The per-key row count behind ``K`` reuses the join's exchange on
+    each side (one per side, plus one per change-key semi join), and
+    ``merge_stats`` aggregates the persisted set with no exchange on the
+    key."""
+    current, incoming, change_keys = scenario
+    classified = [
+        classify_incremental_changes(current, incoming, change_keys, "audit_id"),
+        full_table_diff(current, incoming, "audit_id"),
+    ]
+    assert [_hash_exchanges(df) for df in classified] == [4, 2]
+
+    exchanges = []
+    collect = type(current).collect
+
+    def spy(self):
+        exchanges.append(_hash_exchanges(self))
+        return collect(self)
+
+    monkeypatch.setattr(type(current), "collect", spy)
+    for df in classified:
+        df = df.persist()
+        try:
+            merge_stats(df)
+        finally:
+            df.unpersist()
+    assert exchanges == [0, 0]
+
+
+def test_read_takes_the_schema_from_the_footer(spark, scenario, tmp_path, jobs_launched):
+    """Reading a version launches no job: the schema is the one Spark
+    stored in a part file's footer, not inferred by a job."""
+    from linz_bde_uploader_spark.sinks.target import ParquetTarget
+
+    current = scenario[0]
+    tgt = ParquetTarget(str(tmp_path / "t"), key="audit_id")
+    tgt.replace(current.withColumn("at", F.lit("2024-03-05 10:30:00").cast("timestamp_ntz")))
+    fresh = ParquetTarget(tgt.path, key="audit_id")
+    df, jobs = jobs_launched(lambda: fresh.read(spark))
+    assert jobs == 0
+    assert df.schema == spark.read.parquet(tgt._data_dir()).schema
+    assert df.columns == [*current.columns, "at"]
+    assert df.count() == 3
+
+
 def _persisted(spark) -> int:
     """RDDs the session holds persisted."""
     return spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -310,21 +384,33 @@ def test_gate_counts_come_from_the_staged_write(spark, scenario, tmp_path, monke
     assert staged["stage_full_incremental"].nupdate == 1
 
 
+def _leaves(df):
+    """The leaves of ``df``'s optimized plan, cached plans not entered."""
+    return [n for n in _plan_nodes(df._jdf.queryExecution().optimizedPlan())
+            if n.children().isEmpty()]
+
+
 def test_action_set_is_classified_once(spark, scenario, tmp_path, monkeypatch):
     """The merged frame a stage writes reads its action set from the
     persisted rows ``merge_stats`` counted, so the compare is not planned a
-    second time; the persisted set is released on success and on the
-    tolerance gate, and neither leaves a staged ``v-*``."""
+    second time, and its fresh rows from the same set, so the incoming
+    rows are not read again (no semi join, no leaf of ``incoming`` outside
+    the ``InMemoryRelation``); the persisted set is released on success and
+    on the tolerance gate, and neither leaves a staged ``v-*``."""
     from linz_bde_uploader_spark.operators.tolerance import RowToleranceError
     from linz_bde_uploader_spark.sinks import target as T
 
     written = {}
     write = T._written_rows
+    incoming_leaves = _leaves(scenario[1])
 
     def spy(df, path):
         nodes = list(_plan_nodes(df._jdf.queryExecution().optimizedPlan()))
         written["cached"] = any(n.nodeName() == "InMemoryRelation" for n in nodes)
         written["joins"] = [str(n.joinType()) for n in nodes if n.nodeName() == "Join"]
+        written["reads_incoming"] = any(
+            n.sameResult(m) for n in _leaves(df) for m in incoming_leaves
+        )
         return write(df, path)
 
     monkeypatch.setattr(T, "_written_rows", spy)
@@ -335,6 +421,8 @@ def test_action_set_is_classified_once(spark, scenario, tmp_path, monkeypatch):
         if name != "stage_replace":
             assert written["cached"], name
             assert "FullOuter" not in written["joins"], (name, written["joins"])
+            assert "LeftSemi" not in written["joins"], (name, written["joins"])
+            assert not written["reads_incoming"], name
 
     # the tolerance error tier: 3 rows down to 1
     incoming = scenario[1]
@@ -363,8 +451,8 @@ def test_empty_change_keys_still_count_the_current_version(spark, scenario, tmp_
 
 def test_read_is_memoized_per_version(spark, scenario, tmp_path):
     """One table load reads the current version for negotiation and again
-    for its merge; the second read reuses the first frame (each fresh
-    parquet read runs a schema-inference job), and a commit moves it."""
+    for its merge; the second read reuses the first frame, and a commit
+    moves it."""
     from linz_bde_uploader_spark.sinks.target import ParquetTarget
 
     current, incoming, _ = scenario

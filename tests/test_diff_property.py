@@ -80,7 +80,7 @@ def test_kernel_matches_model(spark, cur, inc, chg):
     assert len(action_rows) == len(got_actions), "duplicate action keys"
     assert got_actions == model_classify(cur, inc, chg)
 
-    merged = apply_changes(cur_df, inc_df, actions, "k")
+    merged = apply_changes(cur_df, actions, "k")
     merged_rows = merged.collect()
     got = {r.k: r.v for r in merged_rows}
     assert len(merged_rows) == len(got), "duplicate merged keys"

@@ -62,3 +62,12 @@ def test_driver_memory_default_is_capped_by_physical_memory(monkeypatch):
     assert _driver_memory() == "24g"
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     assert _driver_memory() == "2g"
+
+
+def test_session_settings(spark):
+    # AQE may coalesce a persisted frame's partitions (the staged write
+    # reads the persisted action set), and no Python call site is
+    # captured per Column call
+    conf = spark.conf.get
+    assert conf("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true"
+    assert conf("spark.python.sql.dataFrameDebugging.enabled") == "false"
